@@ -171,15 +171,20 @@ object OptBench {
               jobsB.synchronized { jobsB.get(je.jobId).foreach(_.t1 = je.time) }
           }
           spark.sparkContext.addSparkListener(listener)
-          val t0 = System.nanoTime()
-          SparkEntry.queries(name)(spark, dir).count()
-          val total = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(600)
-          spark.sparkContext.removeSparkListener(listener)
+          val total =
+            try {
+              val t0 = System.nanoTime()
+              SparkEntry.queries(name)(spark, dir).count()
+              val t = (System.nanoTime() - t0) / 1e9
+              Thread.sleep(600)
+              t
+            } finally spark.sparkContext.removeSparkListener(listener)
           val js = jobsB.synchronized(jobsB.values.toSeq)
           println(f"[jobs] $name total=$total%.3f njobs=${js.size}")
           js.foreach { j =>
-            println(f"[jobs]   id=${j.id} wall=${j.t1 - j.t0}ms stages=${j.stages} tasks=${j.tasks} ${j.nm}")
+            // a job whose end event has not arrived has no wall time
+            val wall = if (j.t1 < 0) "incomplete" else s"${j.t1 - j.t0}ms"
+            println(f"[jobs]   id=${j.id} wall=$wall stages=${j.stages} tasks=${j.tasks} ${j.nm}")
           }
         }
       case Some("profile") =>

@@ -5,16 +5,26 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 
 /** Minimal access shim: `Dataset.ofRows` (turning a custom LogicalPlan
-  * into a DataFrame) and `experimental.extraStrategies` (runtime
-  * strategy injection) are `private[sql]`/classic-only in Spark 4.
+  * into a DataFrame), `experimental.extraStrategies` (runtime strategy
+  * injection) and the session state's SQL/Hadoop confs are
+  * `private[sql]`/classic-only in Spark 4.
   * This is the conventional extension-library technique (a dedicated
   * subpackage of org.apache.spark.sql) — no Spark internals are
-  * modified or forked, we only call two existing methods.
+  * modified or forked, we only call existing methods.
   */
 object GraftShim {
 
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** The session's SQL conf (what Spark's own readers consult). */
+  def sqlConf(spark: SparkSession): org.apache.spark.sql.internal.SQLConf =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
+
+  /** A Hadoop conf carrying the session's settings, as Spark's file
+    * readers build it. */
+  def newHadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
 
   /** Idempotently append a planner strategy to the session. (Benign if
     * the strategy is ALSO injected via GraftExtensions — the planner

@@ -37,8 +37,8 @@ class FsSchemeSpec extends SparkSpec {
       val local = java.nio.file.Files.createTempDirectory("graft_mockfs_corpus").toString
       val dir = s"mockfs://$local"
       def writeCorpus(n: Int): Unit =
-        (1 to n).map(i => (i.toLong, Seq(i.toDouble, 0.0)))
-          .toDF("vec_id", "v")
+        (1 to n).map(i => (i.toLong, Seq(i.toFloat, 0.0f), 0))
+          .toDF("vec_id", "embedding", "label")
           .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
       writeCorpus(5)
       assert(graft.operators.Similarity.corpusCount(spark, dir) === 5L)

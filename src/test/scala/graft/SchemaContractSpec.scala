@@ -21,103 +21,14 @@ import org.apache.spark.sql.types._
   */
 class SchemaContractSpec extends SparkSpec {
 
-  /** expected (name -> acceptable types) per table, in column order.
-    * Integer widths are driver-version-dependent (pandas int32 vs
-    * int64), and key columns only ever feed equality/grouping, so both
-    * widths are accepted where the generator has shipped either. */
-  private val intLike: Set[DataType] = Set(IntegerType, LongType)
-  private def one(t: DataType): Set[DataType] = Set(t)
-
-  private val rawContract: Map[String, Seq[(String, Set[DataType])]] = Map(
-    "region" -> Seq("r_regionkey" -> intLike, "r_name" -> one(StringType)),
-    "nation" -> Seq(
-      "n_nationkey" -> intLike,
-      "n_name"      -> one(StringType),
-      "n_regionkey" -> intLike),
-    "customer" -> Seq(
-      "c_custkey"    -> intLike,
-      "c_name"       -> one(StringType),
-      "c_nationkey"  -> intLike,
-      "c_acctbal"    -> one(DoubleType),
-      "c_mktsegment" -> one(StringType)),
-    "supplier" -> Seq(
-      "s_suppkey"   -> intLike,
-      "s_name"      -> one(StringType),
-      "s_nationkey" -> intLike,
-      "s_acctbal"   -> one(DoubleType)),
-    "part" -> Seq(
-      "p_partkey"     -> intLike,
-      "p_name"        -> one(StringType),
-      "p_brand"       -> one(StringType),
-      "p_type"        -> one(StringType),
-      "p_size"        -> intLike,
-      "p_retailprice" -> one(DoubleType)),
-    "orders" -> Seq(
-      "o_orderkey"      -> intLike,
-      "o_custkey"       -> intLike,
-      "o_orderstatus"   -> one(StringType),
-      "o_totalprice"    -> one(DoubleType),
-      "o_orderdate"     -> Set(TimestampType, TimestampNTZType, DateType),
-      "o_orderpriority" -> one(StringType)),
-    "lineitem" -> Seq(
-      "l_orderkey"      -> intLike,
-      "l_partkey"       -> intLike,
-      "l_suppkey"       -> intLike,
-      "l_linenumber"    -> intLike,
-      "l_quantity"      -> one(DoubleType),
-      "l_extendedprice" -> one(DoubleType),
-      "l_discount"      -> one(DoubleType),
-      "l_tax"           -> one(DoubleType),
-      "l_returnflag"    -> one(StringType),
-      "l_linestatus"    -> one(StringType),
-      "l_shipdate"      -> Set(TimestampType, TimestampNTZType, DateType)),
-    "events" -> Seq(
-      "event_id"   -> intLike,
-      // accepted variants: nanos-as-long (pre-Aug-2026 generator) or a
-      // real timestamp column (current generator). Tables.events
-      // normalizes both — see Tables.scala.
-      "ts"         -> Set(LongType, TimestampType, TimestampNTZType),
-      "user_id"    -> intLike,
-      "event_type" -> one(StringType),
-      "value"      -> one(DoubleType),
-      "props"      -> one(StringType)),
-    "documents" -> Seq(
-      "doc_id"  -> intLike,
-      "text"    -> one(StringType),
-      "lang"    -> one(StringType),
-      "source"  -> one(StringType),
-      "n_chars" -> intLike),
-    "embeddings" -> Seq(
-      "vec_id"    -> intLike,
-      "embedding" -> Set(ArrayType(FloatType), ArrayType(FloatType, containsNull = false),
-                         ArrayType(DoubleType), ArrayType(DoubleType, containsNull = false)),
-      "label"     -> intLike)
-  )
-
-  private def describeDrift(table: String, actual: StructType,
-                            expected: Seq[(String, Set[DataType])]): Seq[String] = {
-    val actualByName = actual.fields.map(f => f.name -> f.dataType).toMap
-    val missing = expected.collect {
-      case (name, _) if !actualByName.contains(name) =>
-        s"$table.$name MISSING (testdata drifted — column dropped or renamed)"
-    }
-    val wrongType = expected.collect {
-      case (name, ok) if actualByName.get(name).exists(t => !ok.contains(t)) =>
-        s"$table.$name DRIFTED to ${actualByName(name).simpleString} " +
-          s"(accepted: ${ok.map(_.simpleString).mkString(" | ")})"
-    }
-    val extra = actual.fields.collect {
-      case f if !expected.exists(_._1 == f.name) =>
-        s"$table.${f.name} NEW column ${f.dataType.simpleString} (informational)"
-    }
-    missing ++ wrongType ++ extra
-  }
-
-  for ((table, expected) <- rawContract.toSeq.sortBy(_._1)) {
+  /** The accepted raw types per table live in [[Tables.contract]], which
+    * `Tables` also enforces at every call; these tests scan the files
+    * themselves, independently of that resolution path. */
+  for (table <- Tables.contract.keys.toSeq.sorted) {
     test(s"raw $table.parquet matches the testdata contract") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val actual = spark.read.parquet(s"$sf/$table.parquet").schema
-      val drift = describeDrift(table, actual, expected)
+      val drift = Tables.describeDrift(table, actual)
       val fatal = drift.filterNot(_.contains("informational"))
       assert(fatal.isEmpty,
         s"\nTESTDATA SCHEMA DRIFT in $table.parquet:\n  " + drift.mkString("\n  ") +
@@ -151,7 +62,7 @@ class SchemaContractSpec extends SparkSpec {
       "documents"  -> Tables.documents(spark, sf),
       "embeddings" -> Tables.embeddings(spark, sf)
     )
-    for ((name, df) <- loaders; (col, _) <- rawContract(name)) {
+    for ((name, df) <- loaders; (col, _) <- Tables.contract(name)) {
       assert(df.columns.contains(col), s"Tables.$name lost contract column $col")
     }
   }
