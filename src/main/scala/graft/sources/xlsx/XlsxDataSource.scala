@@ -2,6 +2,7 @@ package graft.sources.xlsx
 
 import java.util
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -10,6 +11,8 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamException}
+import scala.util.Using
 
 /** Minimal XLSX DataSource V2 (SURVEY.md §2.1 S3: the reference's whole
   * purpose is XLSX-file ETL — /root/reference/main.py:12 filters for
@@ -18,10 +21,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * stubbed at main.py:17).
   *
   * XLSX is a zip of XML parts; this reader uses only the JDK
-  * (java.util.zip + javax.xml) — no POI — and reads the two parts that
-  * matter: `xl/sharedStrings.xml` and `xl/worksheets/sheet1.xml`.
-  * Row 1 is the header; every column is StringType (schema-at-read-
-  * time, matching the survey's inference note at SURVEY.md §1.2).
+  * (java.util.zip + javax.xml) — no POI. The small metadata parts
+  * (workbook, rels, styles, `xl/sharedStrings.xml`) are read whole;
+  * the worksheet is streamed one `<row>` at a time ([[XlsxParser.rows]]),
+  * so no caller holds a whole sheet in memory. Row 1 is the header;
+  * every column is StringType (schema-at-read-time, matching the
+  * survey's inference note at SURVEY.md §1.2) unless `inferSchema` is
+  * set, in which case inference reads the header plus its share of
+  * `inferSampleRows` rows from each file and stops there. Without
+  * `inferSchema`, planning reads only the header.
   *
   * Scale shape: one input partition per file (spreadsheets are small
   * and row-group-less — file granularity IS the parallelism, the same
@@ -52,29 +60,33 @@ class XlsxDataSource extends TableProvider with DataSourceRegister {
     // table declares ACCEPT_ANY_SCHEMA, so empty is correct here.
     if (ps.isEmpty) return new StructType()
     val sheetOpt = Option(options.get("sheet"))
-    val parsed = XlsxParser.parse(ps.head, sheetOpt)
-    val header = parsed.headOption.getOrElse(Seq.empty)
+    val infer = options.getBoolean("inferSchema", false)
+    // per-file quota, not a global first-come cap: EVERY part file
+    // contributes rows, so a wider type that only appears in a later
+    // part (a decimal among integers) still widens the column even
+    // when the first part alone would exhaust a global cap
+    val perFile =
+      if (infer) math.max(16, options.getInt("inferSampleRows", 1000) / ps.size) else 0
+    // the header plus at most perFile rows; the rest of the sheet is
+    // never parsed (a malformed row past the sample fails at scan time)
+    def head(p: String): Vector[Seq[String]] =
+      Using.resource(XlsxParser.rows(p, sheetOpt))(_.take(1 + perFile).toVector)
+    val first = head(ps.head)
+    val header = first.headOption.getOrElse(Seq.empty)
     val names = header.zipWithIndex.map { case (name, i) =>
       if (name == null || name.isEmpty) s"_c$i" else name
     }
     // typed schema-at-read (SURVEY §1.2): sample rows ACROSS the part
-    // workbooks (up to the cap) and unify per-column cell types,
-    // exactly like Spark's CSV inferSchema — opt-in so the default
-    // stays the all-string raw-fidelity read. Sampling every file (not
-    // just the first) keeps a type that only appears in a later part
-    // (e.g. a decimal among integers) from inferring too narrow and
-    // silently nulling under the permissive converter.
-    if (options.getBoolean("inferSchema", false)) {
-      val sampleCap = options.getInt("inferSampleRows", 1000)
-      // per-file quota, not a global first-come cap: EVERY part file
-      // contributes rows, so a wider type that only appears in a
-      // later part (a decimal among integers) still widens the column
-      // even when the first part alone would exhaust a global cap
-      val perFile = math.max(16, sampleCap / ps.size)
+    // workbooks and unify per-column cell types, exactly like Spark's
+    // CSV inferSchema — opt-in so the default stays the all-string
+    // raw-fidelity read. Sampling every file (not just the first)
+    // keeps a type that only appears in a later part from inferring
+    // too narrow and silently nulling under the permissive converter.
+    if (infer) {
       val sample = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
-      sample ++= parsed.drop(1).take(perFile)
+      sample ++= first.drop(1)
       ps.iterator.drop(1).foreach { p =>
-        val part = XlsxParser.parse(p, sheetOpt)
+        val part = head(p)
         // inference assumes every part shares the first file's column
         // order (cells land by ordinal) — a reordered/extra-column
         // part would feed the wrong cells into each column's type
@@ -90,7 +102,7 @@ class XlsxDataSource extends TableProvider with DataSourceRegister {
               " does not match the first part's header " +
               header.mkString("[", ", ", "]") +
               " — parts of one dataset must share one column layout")
-        sample ++= part.drop(1).take(perFile)
+        sample ++= part.drop(1)
       }
       StructType(names.zipWithIndex.map { case (name, i) =>
         val cells = sample.toSeq.map(r => if (i < r.length) r(i) else null)
@@ -339,7 +351,7 @@ class XlsxDataWriter(dir: String, schema: StructType, partitionId: Int, taskId: 
     }
   override def commit(): WriterCommitMessage = {
     val tmp = new java.io.File(dir, s".part-$partitionId-$taskId.xlsx.tmp")
-    XlsxParser.write(tmp.getPath, schema.fieldNames.toSeq, buf.toSeq)
+    XlsxParser.write(tmp.getPath, schema.fieldNames.toSeq, buf)
     XlsxCommitMessage(partitionId, tmp.getPath)
   }
   override def abort(): Unit = ()
@@ -383,15 +395,15 @@ class XlsxBatch(fullSchema: StructType, required: StructType, paths: Seq[String]
     // (mistyped) columns — each partition reader re-checks its own
     // file's header against this reference and fails with both
     // headers in the message. Single-file scans skip it (their header
-    // IS the reference). One extra driver-side parse of the first
-    // file, same cost class as schema inference.
+    // IS the reference). Planning reads only the first row of the
+    // first file.
     // (if the FIRST part is zero-row, expectedHeader stays empty and
     // validation is disabled for the scan — with no reference layout
     // there is nothing to validate against without parsing further
     // files driver-side)
     val expectedHeader: Seq[String] =
       if (paths.size <= 1) Seq.empty
-      else XlsxParser.parse(paths.head, sheet).headOption.getOrElse(Seq.empty)
+      else Using.resource(XlsxParser.rows(paths.head, sheet))(_.nextOption().getOrElse(Seq.empty))
     new XlsxReaderFactory(fullSchema, required, sheet, failFast, expectedHeader)
   }
 }
@@ -408,27 +420,29 @@ class XlsxReaderFactory(fullSchema: StructType, required: StructType,
     // all-string schema; parsed values for inferred/user schemas)
     val ordinals = required.fieldNames.map(n => fullSchema.fieldIndex(n))
     val convert = required.fields.map(f => XlsxTypeInference.converter(f.dataType))
+    val rows = XlsxParser.rows(path, sheet, failOnError = failFast)
+    try {
+      // zero-row parts carry no header: nothing to validate, nothing
+      // to misalign — read as empty instead of aborting the scan
+      val h = rows.nextOption()
+      if (expectedHeader.nonEmpty && h.exists(_ != expectedHeader))
+        throw new IllegalArgumentException(
+          s"xlsx: header of part file $path " +
+            h.get.mkString("[", ", ", "]") +
+            " does not match the first part's header " +
+            expectedHeader.mkString("[", ", ", "]") +
+            " — parts of one dataset must share one column layout")
+    } catch { case e: Throwable => rows.close(); throw e }
     new PartitionReader[InternalRow] {
-      private val parsed = XlsxParser.parse(path, sheet, failOnError = failFast)
-      locally {
-        // zero-row parts carry no header: nothing to validate, nothing
-        // to misalign — read as empty instead of aborting the scan
-        val h = parsed.headOption.getOrElse(Seq.empty)
-        if (expectedHeader.nonEmpty && parsed.nonEmpty && h != expectedHeader)
-          throw new IllegalArgumentException(
-            s"xlsx: header of part file $path " +
-              h.mkString("[", ", ", "]") +
-              " does not match the first part's header " +
-              expectedHeader.mkString("[", ", ", "]") +
-              " — parts of one dataset must share one column layout")
-      }
-      private val rows = parsed.drop(1).iterator // drop header
       private var current: Seq[String] = _
       override def next(): Boolean = {
         if (rows.hasNext) { current = rows.next(); true } else false
       }
       override def get(): InternalRow = {
-        val vals = ordinals.toSeq.zipWithIndex.map { case (i, o) =>
+        val vals = new Array[Any](ordinals.length)
+        var o = 0
+        while (o < ordinals.length) {
+          val i = ordinals(o)
           if (i < current.length && current(i) != null) {
             val v = convert(o)(current(i))
             // FAILFAST: a non-empty cell that converts to null is a
@@ -441,17 +455,20 @@ class XlsxReaderFactory(fullSchema: StructType, required: StructType,
                 s"xlsx FAILFAST: cannot cast '${current(i)}' to " +
                   s"${required.fields(o).dataType.simpleString} " +
                   s"(column ${required.fields(o).name}, file $path)")
-            v
-          } else null
+            vals(o) = v
+          }
+          o += 1
         }
-        InternalRow.fromSeq(vals)
+        new GenericInternalRow(vals)
       }
-      override def close(): Unit = ()
+      // releases the zip on completion, on failure and after a limit
+      override def close(): Unit = rows.close()
     }
   }
 }
 
-/** JDK-only XLSX parsing: zip entries + DOM over the relevant parts.
+/** JDK-only XLSX parsing: zip entries, a DOM over the small metadata
+  * parts, and a StAX stream over the worksheet ([[XlsxParser.rows]]).
   * Cell addresses (`r="B3"`, multi-letter `AA1`+ supported) give the
   * column index; `t="s"` cells indirect through the shared-strings
   * table; `t="inlineStr"` concatenates ALL `<t>` runs (rich-text
@@ -593,17 +610,36 @@ object XlsxParser {
   private[graft] def resolveSheet(path: String, sheet: Option[String]): String =
     resolveFrom(sheetEntries(path), path, sheet)
 
-  def parse(path: String): Seq[Seq[String]] = parse(path, None)
+  /** XXE-hardened StAX factory for worksheet parts. The JDK's own
+    * implementation is named on purpose: `newInstance()` may resolve to
+    * another provider on the classpath (Woodstox), which parses an
+    * unreferenced internal DTD subset silently even with DTD support
+    * off. [[SheetRows]] also rejects any DTD event outright. */
+  private def newStaxFactory(): XMLInputFactory = {
+    val f = XMLInputFactory.newDefaultFactory()
+    f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
+    f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
+    // element and attribute names compare as written (`x:row` is not
+    // `row`), as in the non-namespace-aware DOM of the metadata parts
+    f.setProperty(XMLInputFactory.IS_NAMESPACE_AWARE, false)
+    f
+  }
 
-  def parse(path: String, sheet: Option[String]): Seq[Seq[String]] =
-    parse(path, sheet, failOnError = false)
+  /** Every row of a sheet, header first. */
+  def parse(path: String, sheet: Option[String] = None,
+            failOnError: Boolean = false): Seq[Seq[String]] =
+    Using.resource(rows(path, sheet, failOnError))(_.toVector)
 
-  /** `failOnError = true` is the FAILFAST contract for `t="e"` error
+  /** The rows of a sheet, header first, parsed one `<row>` at a time as
+    * the iterator advances. The caller closes it (that closes the zip);
+    * it also closes itself at the end of the sheet.
+    *
+    * `failOnError = true` is the FAILFAST contract for `t="e"` error
     * cells (a value-LEVEL problem the typed converter never sees —
     * the parser nulls them before conversion, so the scan's
     * cannot-cast check alone would silently pass them). */
-  def parse(path: String, sheet: Option[String],
-            failOnError: Boolean): Seq[Seq[String]] = {
+  def rows(path: String, sheet: Option[String] = None,
+           failOnError: Boolean = false): SheetRows = {
     val zip = new java.util.zip.ZipFile(path)
     try {
       val db = newDocBuilder()
@@ -654,78 +690,171 @@ object XlsxParser {
 
       val sheetZipEntry = Option(zip.getEntry(sheetEntry)).getOrElse(
         throw new IllegalArgumentException(s"$path: no $sheetEntry"))
-      val doc = db.parse(zip.getInputStream(sheetZipEntry))
-      val rowNodes = doc.getElementsByTagName("row")
-      (0 until rowNodes.getLength).map { r =>
-        val row = rowNodes.item(r).asInstanceOf[org.w3c.dom.Element]
-        val cells = row.getElementsByTagName("c")
-        val out = scala.collection.mutable.ArrayBuffer.empty[String]
-        (0 until cells.getLength).foreach { ci =>
-          val cell = cells.item(ci).asInstanceOf[org.w3c.dom.Element]
-          val idx = Option(cell.getAttribute("r")).filter(_.nonEmpty)
-            .map(columnIndex).getOrElse(ci)
-          val t = cell.getAttribute("t")
-          val value: String = t match {
-            case "s" =>
-              val vs = cell.getElementsByTagName("v")
-              if (vs.getLength > 0) shared(vs.item(0).getTextContent.trim.toInt) else null
-            case "inlineStr" =>
-              // rich-text inline strings carry multiple <r><t> runs —
-              // one logical value, concatenated in document order
-              val is = cell.getElementsByTagName("t")
-              if (is.getLength > 0)
-                (0 until is.getLength).map(is.item(_).getTextContent).mkString
-              else null
-            case "d" => // ISO-8601 date literal cell — verbatim
-              val vs = cell.getElementsByTagName("v")
-              if (vs.getLength > 0) vs.item(0).getTextContent else null
-            case "str" =>
-              // FORMULA cell with a cached STRING result: <f> holds
-              // the formula, <v> the cached text — the value is the
-              // cache, verbatim, and never date-converted (it is
-              // text, not a serial; numeric formula caches have no
-              // t attribute and take the default branch below,
-              // including date-style serial conversion)
-              val vs = cell.getElementsByTagName("v")
-              if (vs.getLength > 0) vs.item(0).getTextContent else null
-            case "e" =>
-              // ERROR cell (#DIV/0!, #N/A, …): there is no usable
-              // value. PERMISSIVE reads null (like a malformed cell);
-              // FAILFAST surfaces the error with cell context — the
-              // CSV-mode contract applied to workbook semantics
-              if (failOnError) {
-                val vs = cell.getElementsByTagName("v")
-                val err = if (vs.getLength > 0) vs.item(0).getTextContent else "#ERROR"
-                throw new IllegalArgumentException(
-                  s"xlsx FAILFAST: error cell $err at ${cell.getAttribute("r")} in $path")
-              } else null
-            case _ =>
-              val vs = cell.getElementsByTagName("v")
-              val raw = if (vs.getLength > 0) vs.item(0).getTextContent else null
-              // numeric cell styled as a date → resolve through the
-              // workbook date system to an ISO string
-              val s = cell.getAttribute("s")
-              // defensive like the numFmtId parse above: a malformed
-              // style index (s="x") means "not a date style", not a
-              // whole-file abort
-              val styleIdx = scala.util.Try(s.toInt).toOption
-              if (raw != null && styleIdx.exists(dateStyles.contains))
-                try dateSerialToIso(raw.trim.toDouble, date1904)
-                catch { case _: NumberFormatException => raw }
-              else raw
-          }
-          while (out.length <= idx) out += null
-          out(idx) = value
-        }
-        out.toSeq
+      new SheetRows(path, zip, zip.getInputStream(sheetZipEntry),
+        shared, dateStyles, date1904, failOnError)
+    } catch { case e: Throwable => zip.close(); throw e }
+  }
+
+  /** Row iterator over one worksheet part (see [[rows]]). Malformed XML
+    * fails with the file and the number of rows read before it. */
+  final class SheetRows private[XlsxParser] (
+      path: String, zip: java.util.zip.ZipFile, in: java.io.InputStream,
+      shared: IndexedSeq[String], dateStyles: Set[Int], date1904: Boolean,
+      failOnError: Boolean) extends Iterator[Seq[String]] with java.io.Closeable {
+    import XMLStreamConstants._
+
+    private var rowsRead = 0
+    private var atRow = false  // positioned on a <row> start tag
+    private var closed = false
+    private val xml = guard(newStaxFactory().createXMLStreamReader(in))
+
+    private def guard[A](body: => A): A =
+      try body catch {
+        case e: XMLStreamException =>
+          close()
+          throw new IllegalArgumentException(
+            s"xlsx: malformed worksheet in $path after row $rowsRead: ${e.getMessage}", e)
       }
-    } finally zip.close()
+
+    override def hasNext: Boolean = {
+      if (!atRow && !closed) atRow = guard(toNextRow())
+      atRow
+    }
+
+    override def next(): Seq[String] = {
+      if (!hasNext) throw new NoSuchElementException(s"xlsx: no more rows in $path")
+      atRow = false
+      val row = guard(readRow())
+      rowsRead += 1
+      row
+    }
+
+    override def close(): Unit = if (!closed) {
+      closed = true
+      atRow = false
+      try if (xml != null) xml.close() finally zip.close()
+    }
+
+    private def toNextRow(): Boolean = {
+      while (xml.hasNext) xml.next() match {
+        case START_ELEMENT if xml.getLocalName == "row" => return true
+        case DTD => throw new IllegalArgumentException(
+          s"xlsx: $path: worksheet declares a DTD, which is not allowed")
+        case _ =>
+      }
+      close()
+      false
+    }
+
+    private val cells = scala.collection.mutable.ArrayBuffer.empty[String]
+
+    /** Cells of the current row, null-padded by column index; leaves
+      * the reader on `</row>`. A `<c>` at any depth is a cell, like the
+      * DOM's `getElementsByTagName("c")`. */
+    private def readRow(): Seq[String] = {
+      cells.clear()
+      var pos = 0
+      var depth = 0
+      var inRow = true
+      while (inRow) xml.next() match {
+        case START_ELEMENT =>
+          if (xml.getLocalName == "c") { readCell(pos); pos += 1 }
+          else depth += 1
+        case END_ELEMENT => if (depth == 0) inRow = false else depth -= 1
+        case _ =>
+      }
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(cells.toArray)
+    }
+
+    /** Stores the cell at the reader, `pos`-th in its row, into
+      * `cells`; leaves the reader on `</c>`. */
+    private def readCell(pos: Int): Unit = {
+      var ref, t, style: String = null
+      var a = 0
+      while (a < xml.getAttributeCount) {
+        xml.getAttributeLocalName(a) match {
+          case "r" => ref = xml.getAttributeValue(a)
+          case "t" => t = xml.getAttributeValue(a)
+          case "s" => style = xml.getAttributeValue(a)
+          case _ =>
+        }
+        a += 1
+      }
+      var v: String = null    // the first <v>
+      var runs: String = null // every <t>, in document order
+      var depth = 0
+      var inCell = true
+      while (inCell) xml.next() match {
+        case START_ELEMENT => xml.getLocalName match {
+          case "v" => val s = text(); if (v == null) v = s
+          case "t" => val s = text(); runs = if (runs == null) s else runs + s
+          case _ => depth += 1
+        }
+        case END_ELEMENT => if (depth == 0) inCell = false else depth -= 1
+        case _ =>
+      }
+      val idx = if (ref == null || ref.isEmpty) pos else columnIndex(ref)
+      val cell = value(ref, t, style, v, runs)
+      while (cells.length <= idx) cells += null
+      cells(idx) = cell
+    }
+
+    private def value(ref: String, t: String, style: String, v: String, runs: String): String =
+      t match {
+        case "s" => if (v != null) shared(v.trim.toInt) else null
+        // rich-text inline strings carry multiple <r><t> runs — one
+        // logical value, concatenated in document order
+        case "inlineStr" => runs
+        case "d" => v // ISO-8601 date literal cell — verbatim
+        // FORMULA cell with a cached STRING result: <f> holds the
+        // formula, <v> the cached text — the value is the cache,
+        // verbatim, and never date-converted (it is text, not a
+        // serial; numeric formula caches have no t attribute and take
+        // the default branch below, including date-style conversion)
+        case "str" => v
+        case "e" =>
+          // ERROR cell (#DIV/0!, #N/A, …): there is no usable value.
+          // PERMISSIVE reads null (like a malformed cell); FAILFAST
+          // surfaces the error with cell context — the CSV-mode
+          // contract applied to workbook semantics
+          if (failOnError)
+            throw new IllegalArgumentException(
+              s"xlsx FAILFAST: error cell ${Option(v).getOrElse("#ERROR")} " +
+                s"at ${Option(ref).getOrElse("")} in $path")
+          else null
+        case _ =>
+          // numeric cell styled as a date → resolve through the
+          // workbook date system to an ISO string. A malformed style
+          // index (s="x") means "not a date style", not a whole-file
+          // abort
+          val styleIdx = Option(style).flatMap(s => scala.util.Try(s.toInt).toOption)
+          if (v != null && styleIdx.exists(dateStyles.contains))
+            try dateSerialToIso(v.trim.toDouble, date1904)
+            catch { case _: NumberFormatException => v }
+          else v
+      }
+
+    /** Text of the current element, nested elements included (DOM
+      * `getTextContent`); leaves the reader on its end tag. */
+    private def text(): String = {
+      val sb = new java.lang.StringBuilder
+      var depth = 1
+      while (depth > 0) xml.next() match {
+        case START_ELEMENT => depth += 1
+        case END_ELEMENT => depth -= 1
+        case CHARACTERS | CDATA | SPACE =>
+          sb.append(xml.getTextCharacters, xml.getTextStart, xml.getTextLength)
+        case _ =>
+      }
+      sb.toString
+    }
   }
 
   /** Minimal XLSX writer (driver-side utility for tests/round-trips):
     * one sheet, inline strings, no shared-strings table. Produces a
-    * file this reader and standard tools can open. */
-  def write(path: String, header: Seq[String], rows: Seq[Seq[String]]): Unit = {
+    * file this reader and standard tools can open. Rows stream into
+    * the sheet entry; the sheet is never built as one string. */
+  def write(path: String, header: Seq[String], rows: Iterable[Seq[String]]): Unit = {
     def esc(s: String): String =
       if (s == null) ""
       else s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
@@ -735,18 +864,17 @@ object XlsxParser {
       while (n > 0) { val r = (n - 1) % 26; sb.insert(0, ('A' + r).toChar); n = (n - 1) / 26 }
       sb.toString
     }
-    def rowXml(r: Int, vals: Seq[String]): String =
-      s"""<row r="${r + 1}">""" + vals.zipWithIndex.collect {
+    def writeRow(w: java.io.Writer, r: Int, vals: Seq[String]): Unit = {
+      w.write(s"""<row r="${r + 1}">""")
+      vals.iterator.zipWithIndex.foreach {
         // null cells are omitted entirely; the reader pads them back as null
         case (v, i) if v != null =>
-          s"""<c r="${colRef(i)}${r + 1}" t="inlineStr"><is><t>${esc(v)}</t></is></c>"""
-      }.mkString + "</row>"
+          w.write(s"""<c r="${colRef(i)}${r + 1}" t="inlineStr"><is><t>${esc(v)}</t></is></c>""")
+        case _ =>
+      }
+      w.write("</row>")
+    }
 
-    val sheet =
-      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-        """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""" +
-        rowXml(0, header) + rows.zipWithIndex.map { case (r, i) => rowXml(i + 1, r) }.mkString +
-        "</sheetData></worksheet>"
     val contentTypes =
       """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
         """<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">""" +
@@ -765,17 +893,28 @@ object XlsxParser {
         """<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet1.xml"/>""" +
         "</Relationships>"
 
-    val zos = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(path))
+    val zos = new java.util.zip.ZipOutputStream(
+      new java.io.BufferedOutputStream(new java.io.FileOutputStream(path)))
+    val out = new java.io.BufferedWriter(
+      new java.io.OutputStreamWriter(zos, java.nio.charset.StandardCharsets.UTF_8))
     try {
-      def entry(name: String, content: String): Unit = {
+      def entry(name: String)(body: => Unit): Unit = {
         zos.putNextEntry(new java.util.zip.ZipEntry(name))
-        zos.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        body
+        out.flush()
         zos.closeEntry()
       }
-      entry("[Content_Types].xml", contentTypes)
-      entry("xl/workbook.xml", workbook)
-      entry("xl/_rels/workbook.xml.rels", rels)
-      entry("xl/worksheets/sheet1.xml", sheet)
-    } finally zos.close()
+      entry("[Content_Types].xml")(out.write(contentTypes))
+      entry("xl/workbook.xml")(out.write(workbook))
+      entry("xl/_rels/workbook.xml.rels")(out.write(rels))
+      entry("xl/worksheets/sheet1.xml") {
+        out.write("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
+          """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""")
+        writeRow(out, 0, header)
+        var r = 1
+        rows.foreach { row => writeRow(out, r, row); r += 1 }
+        out.write("</sheetData></worksheet>")
+      }
+    } finally out.close()
   }
 }

@@ -84,6 +84,9 @@ object Streams {
     * is read from `landingRoot` through the typed XLSX DSv2
     * (`inferSchema=true` — the schema-at-read model of main.py:17's
     * implied load) → `transform` → checkpointed warehouse write.
+    * Each object is parsed by one streamed pass over its worksheet,
+    * inside the warehouse write; planning reads only its header plus
+    * the first `inferSampleRows` (1000) rows for inference.
     *
     * Exactly-once story (two independent mechanisms, both required):
     *  1. the checkpoint makes each notification batch process at

@@ -156,14 +156,26 @@ class XlsxSourceSpec extends SparkSpec {
     assert(row.getString(0) === "hello")
   }
 
-  private def buildWorkbook(path: String, sheetXml: String): Unit = {
+  /** A workbook whose only part is `xl/worksheets/sheet1.xml`, verbatim. */
+  private def writeSheetPart(path: String, xml: String): Unit = {
     val zos = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(path))
     zos.putNextEntry(new java.util.zip.ZipEntry("xl/worksheets/sheet1.xml"))
-    zos.write(
-      ("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""" +
-        sheetXml + """</sheetData></worksheet>""").getBytes("UTF-8"))
+    zos.write(xml.getBytes("UTF-8"))
     zos.closeEntry(); zos.close()
   }
+
+  private def buildWorkbook(path: String, sheetXml: String): Unit =
+    writeSheetPart(path,
+      """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""" +
+        sheetXml + """</sheetData></worksheet>""")
+
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
+
+  private def inlineRow(r: Int, cells: String*): String =
+    s"""<row r="$r">""" + cells.zipWithIndex.map { case (v, i) =>
+      s"""<c r="${('A' + i).toChar}$r" t="inlineStr"><is><t>$v</t></is></c>"""
+    }.mkString + "</row>"
 
   test("formula cells: t=\"str\" takes the cached string; numeric caches convert typed") {
     // the first real-world workbook a user drops contains formulas —
@@ -263,5 +275,122 @@ class XlsxSourceSpec extends SparkSpec {
     def messages(t: Throwable): Seq[String] =
       if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(e).mkString(" | ").contains("does not match the first part's header"))
+  }
+
+  test("doctype with an unreferenced internal entity is rejected, naming the file") {
+    // a DTD-tolerant StAX provider parses this silently when the
+    // entity is never used; the worksheet reader must still refuse it
+    val path = tmp("dtd.xlsx")
+    writeSheetPart(path,
+      """<?xml version="1.0"?><!DOCTYPE x [<!ENTITY e "boom">]>""" +
+        """<worksheet><sheetData>""" + inlineRow(1, "a") + """</sheetData></worksheet>""")
+    val e = intercept[IllegalArgumentException] { XlsxParser.parse(path) }
+    assert(e.getMessage.contains(path), e.getMessage)
+  }
+
+  test("a sheet truncated past the inference sample plans from its prefix, then fails the scan naming the file") {
+    val path = tmp("truncated.xlsx")
+    val good = (1 to 3000).map(i => s"""<row r="${i + 1}"><c r="A${i + 1}"><v>$i</v></c>""" +
+      s"""<c r="B${i + 1}" t="inlineStr"><is><t>n$i</t></is></c><c r="C${i + 1}"><v>$i.5</v></c></row>""")
+    writeSheetPart(path,
+      """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""" +
+        inlineRow(1, "id", "name", "amount") + good.mkString +
+        """<row r="3002"><c r="A3002"><v>30""")
+    // planning reads the header (and the sample) only, so both succeed
+    assert(spark.read.format("xlsx").load(path).schema.fieldNames.toSeq ===
+      Seq("id", "name", "amount"))
+    val typed = spark.read.format("xlsx").option("inferSchema", true).load(path)
+    assert(typed.schema.fields.map(_.dataType.typeName).toSeq === Seq("long", "string", "double"))
+    // the scan reaches the truncation and fails loudly with the file
+    // and the last good row
+    val e = intercept[Exception] { typed.collect() }
+    val all = messages(e).mkString(" | ")
+    assert(all.contains(path) && all.contains("after row 3001"), all)
+  }
+
+  test("scans that stop early (FAILFAST error, limit) release their workbook files") {
+    def openFds(): Int = new java.io.File("/proc/self/fd").list().length
+    val dir = tmp("fd_dir")
+    new java.io.File(dir).mkdirs()
+    val rows = (1 to 1000).map { i =>
+      val b = if (i == 500) s"""<c r="B${i + 1}" t="e"><v>#N/A</v></c>"""
+              else s"""<c r="B${i + 1}"><v>$i</v></c>"""
+      s"""<row r="${i + 1}"><c r="A${i + 1}"><v>$i</v></c>$b</row>"""
+    }.mkString
+    buildWorkbook(s"$dir/w0.xlsx", inlineRow(1, "id", "v") + rows)
+    // one file per read: the JDK shares one descriptor among open
+    // handles of the same file, which would hide a per-read leak
+    val paths = (1 to 40).map { i =>
+      val p = s"$dir/w$i.xlsx"
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/w0.xlsx"), java.nio.file.Paths.get(p))
+      p
+    }
+    // descriptors open on one workbook, checked as each read returns:
+    // a GC closes an abandoned zip later, which the total can miss
+    def openOn(p: String): Int = {
+      val target = new java.io.File(p).getCanonicalPath
+      new java.io.File("/proc/self/fd").listFiles().count(f =>
+        scala.util.Try(java.nio.file.Files.readSymbolicLink(f.toPath).toString == target)
+          .getOrElse(false))
+    }
+    spark.read.format("xlsx").load(s"$dir/w0.xlsx").limit(1).collect() // warm-up
+    val before = openFds()
+    val failFastLeaks = paths.take(20).map { p =>
+      val e = intercept[Exception] {
+        spark.read.format("xlsx").option("mode", "FAILFAST").load(p).collect()
+      }
+      assert(messages(e).mkString(" | ").contains("#N/A"))
+      openOn(p)
+    }.sum
+    val limitLeaks = paths.drop(20).map { p =>
+      assert(spark.read.format("xlsx").load(p).limit(1).collect().length === 1)
+      openOn(p)
+    }.sum
+    assert(failFastLeaks === 0 && limitLeaks === 0,
+      s"workbooks left open: $failFastLeaks after FAILFAST aborts, $limitLeaks after limit(1)")
+    val grown = openFds() - before
+    assert(grown < 20, s"open descriptors grew by $grown over 40 early-stopped scans")
+  }
+
+  test("writer emits the recorded sheet1.xml bytes (28 columns, nulls, escaping)") {
+    val path = tmp("golden.xlsx")
+    val header = (0 until 28).map(i => s"h$i")
+    XlsxParser.write(path, header, Seq(
+      Seq("1", "a & b <c>") ++ Seq.fill(24)(null: String) ++ Seq("x", "y"),
+      Seq("2", null) ++ Seq.fill(24)(null: String) ++ Seq("z", null),
+      Seq("3", "") ++ Seq.fill(25)(null: String) ++ Seq("&")))
+    val zip = new java.util.zip.ZipFile(path)
+    val got = try new String(zip.getInputStream(zip.getEntry("xl/worksheets/sheet1.xml"))
+      .readAllBytes(), "UTF-8") finally zip.close()
+    // recorded from the writer before rows streamed into the entry
+    val expected =
+      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
+        """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""" +
+        """<row r="1">""" +
+        """<c r="A1" t="inlineStr"><is><t>h0</t></is></c><c r="B1" t="inlineStr"><is><t>h1</t></is></c>""" +
+        """<c r="C1" t="inlineStr"><is><t>h2</t></is></c><c r="D1" t="inlineStr"><is><t>h3</t></is></c>""" +
+        """<c r="E1" t="inlineStr"><is><t>h4</t></is></c><c r="F1" t="inlineStr"><is><t>h5</t></is></c>""" +
+        """<c r="G1" t="inlineStr"><is><t>h6</t></is></c><c r="H1" t="inlineStr"><is><t>h7</t></is></c>""" +
+        """<c r="I1" t="inlineStr"><is><t>h8</t></is></c><c r="J1" t="inlineStr"><is><t>h9</t></is></c>""" +
+        """<c r="K1" t="inlineStr"><is><t>h10</t></is></c><c r="L1" t="inlineStr"><is><t>h11</t></is></c>""" +
+        """<c r="M1" t="inlineStr"><is><t>h12</t></is></c><c r="N1" t="inlineStr"><is><t>h13</t></is></c>""" +
+        """<c r="O1" t="inlineStr"><is><t>h14</t></is></c><c r="P1" t="inlineStr"><is><t>h15</t></is></c>""" +
+        """<c r="Q1" t="inlineStr"><is><t>h16</t></is></c><c r="R1" t="inlineStr"><is><t>h17</t></is></c>""" +
+        """<c r="S1" t="inlineStr"><is><t>h18</t></is></c><c r="T1" t="inlineStr"><is><t>h19</t></is></c>""" +
+        """<c r="U1" t="inlineStr"><is><t>h20</t></is></c><c r="V1" t="inlineStr"><is><t>h21</t></is></c>""" +
+        """<c r="W1" t="inlineStr"><is><t>h22</t></is></c><c r="X1" t="inlineStr"><is><t>h23</t></is></c>""" +
+        """<c r="Y1" t="inlineStr"><is><t>h24</t></is></c><c r="Z1" t="inlineStr"><is><t>h25</t></is></c>""" +
+        """<c r="AA1" t="inlineStr"><is><t>h26</t></is></c><c r="AB1" t="inlineStr"><is><t>h27</t></is></c>""" +
+        """</row>""" +
+        """<row r="2"><c r="A2" t="inlineStr"><is><t>1</t></is></c>""" +
+        """<c r="B2" t="inlineStr"><is><t>a &amp; b &lt;c&gt;</t></is></c>""" +
+        """<c r="AA2" t="inlineStr"><is><t>x</t></is></c><c r="AB2" t="inlineStr"><is><t>y</t></is></c></row>""" +
+        """<row r="3"><c r="A3" t="inlineStr"><is><t>2</t></is></c>""" +
+        """<c r="AA3" t="inlineStr"><is><t>z</t></is></c></row>""" +
+        """<row r="4"><c r="A4" t="inlineStr"><is><t>3</t></is></c>""" +
+        """<c r="B4" t="inlineStr"><is><t></t></is></c>""" +
+        """<c r="AB4" t="inlineStr"><is><t>&amp;</t></is></c></row>""" +
+        """</sheetData></worksheet>"""
+    assert(got === expected)
   }
 }
