@@ -2,6 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim
 
 /** Public library facade — the operator surface a user of the
   * reference system programs against, parameterized over arbitrary
@@ -477,63 +478,45 @@ object Graft {
     val nSym = symRaw.count()
     val contract = preCollapse && level < maxContractLevels && nSym > 1024 &&
       (parentSymEdges < 0L || nSym * 10L < parentSymEdges * 7L)
-    if (sys.props.get("graft.cc.debug").contains("true"))
-      System.err.println(s"[cc] level=$level symEdges=$nSym contract=$contract")
-    // MEASURED-TINY MODE (r16, guide §2.6/§1.2): with AQE on, every
-    // Exchange of every driver-side step (contraction joins, fixpoint
-    // rounds, convergence probes) materializes as its own query stage
-    // = its own driver job (geo_dbscan measured 132 jobs; profile
-    // split construct=7.2 s vs exec=1.0 s — a fixed-overhead wall, not
-    // compute). Disabling AQE globally was measured 4.3× WORSE (its
-    // partition coalescing is load-bearing for data-sized plans), so
-    // the switch keys on the MEASURED symmetrized edge count: below
-    // the threshold, everything from here to the returned labels runs
-    // with AQE off, a size-derived partition count, and codegen off
-    // (each round plans fresh expression ids, so whole-stage codegen
-    // recompiles per round and can never hit its cache). Scale-adaptive
-    // by construction: at 100 TB the level-0 graph measures huge → AQE
-    // stays on; only a residue that measures tiny — exactly where
-    // fixed per-job/per-plan overhead dominates — drops into this
-    // mode, and the partition count derives from nSym, not from the
-    // local core count. `graft.cc.tinyFixpoint` (default on) is the
-    // operational kill switch / A-B knob.
+    // MEASURED-TINY MODE (r16): with AQE on, every Exchange of every
+    // driver-side step (contraction joins, fixpoint rounds, convergence
+    // probes) ran as its own driver job (geo_dbscan measured 132 jobs;
+    // construct=7.2 s vs exec=1.0 s). Disabling AQE globally was
+    // measured 4.3× WORSE (its coalescing is load-bearing for
+    // data-sized plans), so only a graph that MEASURES tiny runs the
+    // rest of this level in a [[tiny]] scope.
     val spark = edges.sparkSession
-    val tinyFixpoint =
-      spark.conf.get("graft.cc.tinyFixpoint", "true").toBoolean &&
-        nSym <= spark.conf.get("graft.cc.tinyFixpointMaxEdges",
-          (1L << 20).toString).toLong
-    val priorAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val priorParts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    val priorCodegen = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    if (tinyFixpoint) {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val parts = math.max(1L, math.min(priorParts.toLong, nSym / 65536L + 1L))
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    val tag = s"cc:$nSym level=$level contract=$contract"
+    scoped(spark, tag, tiny(spark, nSym)) { s =>
+      val sym = on(s, symRaw)
+      if (!contract) ccFixpoint(sym, maxRounds, tag)
+      else {
+        val l0 = sym.groupBy(col("__src")).agg(min(col("__dst")).as("__m"))
+          .select(col("__src").as("id"), least(col("__src"), col("__m")).as("l0"))
+          .localCheckpoint()
+        val la = l0.select(col("id").as("__src"), col("l0").as("__la"))
+        val lb = l0.select(col("id").as("__dst"), col("l0").as("__lb"))
+        val contracted = sym.join(la, "__src").join(lb, "__dst")
+          .filter(col("__la") =!= col("__lb"))
+          .select(col("__la").as(srcCol), col("__lb").as(dstCol))
+          .distinct()
+        val inner = ccImpl(contracted, srcCol, dstCol, maxRounds,
+            preCollapse = true, parentSymEdges = nSym, level = level + 1)
+          .select(col("id").as("l0"), col("component").as("__c"))
+        // fully-collapsed clusters have no contracted edge: their label
+        // IS the component
+        l0.join(inner, Seq("l0"), "left")
+          .select(col("id"), coalesce(col("__c"), col("l0")).as("component"))
+      }
     }
-    try {
-    if (contract) {
-      val l0 = symRaw.groupBy(col("__src")).agg(min(col("__dst")).as("__m"))
-        .select(col("__src").as("id"), least(col("__src"), col("__m")).as("l0"))
-        .localCheckpoint()
-      val la = l0.select(col("id").as("__src"), col("l0").as("__la"))
-      val lb = l0.select(col("id").as("__dst"), col("l0").as("__lb"))
-      val contracted = symRaw.join(la, "__src").join(lb, "__dst")
-        .filter(col("__la") =!= col("__lb"))
-        .select(col("__la").as(srcCol), col("__lb").as(dstCol))
-        .distinct()
-      val inner = ccImpl(contracted, srcCol, dstCol, maxRounds,
-          preCollapse = true, parentSymEdges = nSym, level = level + 1)
-        .select(col("id").as("l0"), col("component").as("__c"))
-      // fully-collapsed clusters have no contracted edge: their label
-      // IS the component
-      return l0.join(inner, Seq("l0"), "left")
-        .select(col("id"), coalesce(col("__c"), col("l0")).as("component"))
-    }
-    // symRaw is already hash-partitioned + checkpointed above, so no
-    // round re-shuffles the O(E) side (the dominant per-round volume on
-    // dense graphs); only the O(V) label side moves each round
-    val sym = symRaw
+  }
+
+  /** The min-label fixpoint of [[connectedComponents]]; each round's
+    * jobs carry `tag` and the round number in [[ScopeTag]]. */
+  private def ccFixpoint(sym: DataFrame, maxRounds: Int, tag: String): DataFrame = {
+    // sym is already hash-partitioned + checkpointed, so no round
+    // re-shuffles the O(E) side (the dominant per-round volume on dense
+    // graphs); only the O(V) label side moves each round
     var labels = sym.select(col("__src").as("id")).distinct()
       .withColumn("component", col("id")).localCheckpoint()
     // Convergence probe, by id type. INTEGRAL ids: labels only ever
@@ -629,6 +612,7 @@ object Graft {
     // batched round). The per-round checkpoint is load-bearing, not
     // bookkeeping.
     while (!done && round < maxRounds) {
+      sym.sparkSession.sparkContext.setLocalProperty(ScopeTag, s"$tag round=$round")
       val comp = oneRound(labels, round)
         // lazy checkpoint: the convergence action below is what
         // materializes it — one Spark job per round
@@ -636,8 +620,6 @@ object Graft {
       if (scalarProbeSafe) {
         val cur = labelSum(comp)
         done = prev == cur
-        if (sys.props.get("graft.cc.debug").contains("true"))
-          System.err.println(s"[cc] level=$level round=$round sum=$cur")
         prev = cur
       } else {
         done = comp.join(labels.withColumnRenamed("component", "__old"), "id")
@@ -646,8 +628,6 @@ object Graft {
       labels = comp
       round += 1
     }
-    if (sys.props.get("graft.cc.debug").contains("true"))
-      System.err.println(s"[cc] level=$level fixpoint rounds=$round")
     if (!done)
       // HARD FAILURE, not a warning (r12 verdict #1): truncated labels
       // are NOT components, and every downstream endpoint (dedupCorpus,
@@ -661,17 +641,7 @@ object Graft {
         s"connectedComponents hit maxRounds=$maxRounds without " +
           "converging - labels would be incomplete; raise maxRounds " +
           "or investigate the graph structure")
-    // every round's labels were materialized by the convergence action,
-    // so restoring the session conf here cannot change what the
-    // returned (checkpointed) frame computes
     labels
-    } finally {
-      if (tinyFixpoint) {
-        spark.conf.set("spark.sql.adaptive.enabled", priorAqe)
-        spark.conf.set("spark.sql.shuffle.partitions", priorParts)
-        spark.conf.set("spark.sql.codegen.wholeStage", priorCodegen)
-      }
-    }
   }
 
   /** End-to-end corpus deduplication — the user-facing endpoint
@@ -953,54 +923,76 @@ object Graft {
     writeWarehouse(df, format, sink.tableRef, partitionBy = Nil,
       mode = sink.saveMode, options = sink.options)
 
-  // ---------- corpus-preparation operators ----------
+  // ---------- scoped execution ----------
 
-  /** Run `body` — driver-side construction that materializes BOUNDED
-    * intermediates (seeded BFS frontiers, beam steps, bounded-model
-    * collects) — with AQE off, a size-derived shuffle-partition count
-    * and whole-stage codegen off, restoring the session conf after.
-    * The generalization of ccImpl's measured-tiny fixpoint mode (r16,
-    * guide §2.6/§1.2): with AQE on, every Exchange of every
-    * materializing step runs as its own query-stage driver job
-    * (graph_betweenness measured 53 jobs of 1-2 tasks × 10-70 ms —
-    * fixed overhead, not compute), and each freshly-planned step
-    * recompiles whole-stage codegen (new expression ids never hit the
-    * cache). Scale discipline: the caller passes a MEASURED row count
-    * (from an already-checkpointed input, where counting is a
-    * shuffle-free cache scan); above the threshold — any real
-    * deployment scale — the body runs untouched under AQE. The
-    * partition count derives from the measured size, never from the
-    * local core count. `graft.tinyExec.enabled` is the operational
-    * kill switch, `graft.tinyExec.maxRows` the threshold knob. */
-  /** Whether [[withTinyExec]] would fire for this measured size —
-    * exposed so a caller can make a companion decision (e.g. eagerly
-    * materialize a bounded tail) under the SAME gate. */
-  private[graft] def tinyExecFires(spark: SparkSession, measuredRows: Long): Boolean =
-    spark.conf.get("graft.tinyExec.enabled", "true").toBoolean &&
-      measuredRows >= 0 &&
-      measuredRows <= spark.conf.get("graft.tinyExec.maxRows",
-        (1L << 20).toString).toLong
+  /** Measured row count at or below which [[tiny]] fires. */
+  private[graft] val TinyRows: Long = 1L << 20
 
-  private[graft] def withTinyExec[T](spark: SparkSession, measuredRows: Long)
-                                    (body: => T): T = {
-    val on = tinyExecFires(spark, measuredRows)
-    if (!on) body
-    else {
-      val priorAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-      val priorParts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-      val priorCodegen = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.shuffle.partitions",
-        math.max(1L, math.min(priorParts.toLong, measuredRows / 65536L + 1L)).toString)
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      try body
-      finally {
-        spark.conf.set("spark.sql.adaptive.enabled", priorAqe)
-        spark.conf.set("spark.sql.shuffle.partitions", priorParts)
-        spark.conf.set("spark.sql.codegen.wholeStage", priorCodegen)
+  /** Job property naming the scope whose body launched a job:
+    * `<gate>:<measured rows>`, plus any state the body adds. */
+  private[graft] val ScopeTag = "graft.scope"
+
+  /** MEASURED-TINY settings (r16) for driver-side construction that
+    * materializes BOUNDED intermediates (seeded BFS frontiers, beam
+    * steps, fixpoint rounds, bounded-model collects): AQE off, codegen
+    * off and a width derived from `rows`, never from the core count.
+    * Under AQE every Exchange of every step ran as its own driver job
+    * (graph_betweenness: 53 jobs of 1-2 tasks × 10-70 ms), and each
+    * fresh step recompiled whole-stage codegen. `rows` is a MEASURED
+    * count, from an already-checkpointed input; above [[TinyRows]] —
+    * any real deployment scale — the settings are empty. */
+  private[graft] def tiny(spark: SparkSession, rows: Long): Map[String, String] =
+    if (rows > TinyRows) Map.empty
+    else Map(
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> math.max(1L, math.min(
+        spark.conf.get("spark.sql.shuffle.partitions").toLong,
+        rows / 65536L + 1L)).toString,
+      "spark.sql.codegen.wholeStage" -> "false")
+
+  /** `df` bound to session `s`: a frame plans and executes under its
+    * own session's conf. */
+  private[graft] def on(s: SparkSession, df: DataFrame): DataFrame =
+    if (df.sparkSession eq s) df
+    else GraftShim.ofRows(s, df.queryExecution.analyzed)
+
+  /** Run `body` against a session that has `spark`'s SQL conf plus
+    * `settings`, and return its frame bound to `spark`. Library code
+    * never writes the caller's session conf, so a query planned
+    * concurrently on `spark` never sees `settings`. The body gets the
+    * scope session and must bind every caller frame it reads to it
+    * with [[on]]. While the body runs, the thread's [[ScopeTag]] job
+    * property is `tag`, so each job it launches names the decision and
+    * the measured size it keyed on. With empty `settings`, or when
+    * `spark` is already a scope session (a gate inside a scoped body,
+    * e.g. ccImpl's recursion), the body runs on `spark` itself. */
+  private[graft] def scoped(spark: SparkSession, tag: String,
+                            settings: Map[String, String])
+                           (body: SparkSession => DataFrame): DataFrame = {
+    val sc = spark.sparkContext
+    val priorTag = sc.getLocalProperty(ScopeTag)
+    sc.setLocalProperty(ScopeTag, tag)
+    try {
+      val held = Scope.held.get
+      if (settings.isEmpty || (held != null && (held._2 eq spark))) body(spark)
+      else {
+        val base = spark.conf.getAll
+        val snapshot = (spark, base, GraftShim.extraPlanning(spark))
+        if (held == null || held._1 != snapshot)
+          Scope.held.set((snapshot, GraftShim.cloneSession(spark)))
+        val s = Scope.held.get._2
+        settings.foreach { case (k, v) => s.conf.set(k, v) }
+        try on(spark, body(s))
+        finally settings.keys.foreach(k => base.get(k).fold(s.conf.unset(k))(s.conf.set(k, _)))
       }
-    }
+    } finally sc.setLocalProperty(ScopeTag, priorTag)
   }
+
+  /** The thread's scope session and the snapshot (caller, its conf,
+    * its planner extensions) it was cloned from. Reused while the
+    * snapshot holds: a fresh clone gets its own artifact classloader,
+    * and a checkpoint on one ran ~3× slower than on a reused clone. */
+  private object Scope { val held = new ThreadLocal[(Any, SparkSession)] }
 
   /** Key-hashed explicit-N repartition applied ONLY when the frame's
     * measured parallelism (its scan split count — a planning-time
@@ -1029,14 +1021,13 @@ object Graft {
     * fired anyway — this only forfeits an optimization that is wrong
     * exactly here. AQE itself stays ON (skew splitting, join
     * planning). */
-  private[graft] def checkpointWide(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prior = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try df.localCheckpoint()
-    finally spark.conf.set(key, prior)
-  }
+  private[graft] def checkpointWide(df: DataFrame): DataFrame =
+    scoped(df.sparkSession, "checkpointWide",
+      Map("spark.sql.adaptive.coalescePartitions.enabled" -> "false")) { s =>
+      on(s, df).localCheckpoint()
+    }
+
+  // ---------- corpus-preparation operators ----------
 
   /** First 8 md5 hex chars of an id as a positive long — the
     * deterministic "random" driver for splits and sampling

@@ -1494,39 +1494,41 @@ object CorpusOps {
       .filter(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .localCheckpoint() // word-freq table: all rounds iterate on this
-    var seg: Column = concat(lit(D + D), regexp_replace(col("w"), "(.)", "$1" + D + D))
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
-    var r = 1
-    var exhausted = false
     // measured-tiny training rounds (r16): each round's pair-count
     // argmax over the Zipf-bounded word-freq table ran as several AQE
     // query-stage driver jobs with per-round codegen recompiles (the
     // seg expression grows each round, so plans never repeat). The
     // count is a shuffle-free scan of the just-checkpointed table and
     // gates the mode off when the vocabulary measures large.
-    graft.api.Graft.withTinyExec(spark, base.count()) {
-    while (r <= bpeTrainRounds && !exhausted) {
-      val sy = split(trim(seg, D), D + D)
-      val n = size(sy)
-      val pairs = zip_with(slice(sy, lit(1), n - 1), slice(sy, lit(2), n - 1),
-        (a, b) => struct(a.as("l"), b.as("r")))
-      val top = base
-        .select(col("freq"), explode(pairs).as("p"))
-        .groupBy(col("p").getField("l").as("l"), col("p").getField("r").as("r"))
-        .agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("l"), col("r"))
-        .limit(1).collect() // bounded: exactly one row per round
-      if (top.isEmpty) exhausted = true
-      else {
-        val (l, rt, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((r, l, rt, l + rt, c))
-        seg = replace(seg, lit(D + l + D + D + rt + D), lit(D + l + rt + D))
-        r += 1
+    val nWords = base.count()
+    graft.api.Graft.scoped(spark, s"bpe_train:$nWords",
+        graft.api.Graft.tiny(spark, nWords)) { s =>
+      val words = graft.api.Graft.on(s, base)
+      var seg: Column = concat(lit(D + D), regexp_replace(col("w"), "(.)", "$1" + D + D))
+      val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
+      var r = 1
+      var exhausted = false
+      while (r <= bpeTrainRounds && !exhausted) {
+        val sy = split(trim(seg, D), D + D)
+        val n = size(sy)
+        val pairs = zip_with(slice(sy, lit(1), n - 1), slice(sy, lit(2), n - 1),
+          (a, b) => struct(a.as("l"), b.as("r")))
+        val top = words
+          .select(col("freq"), explode(pairs).as("p"))
+          .groupBy(col("p").getField("l").as("l"), col("p").getField("r").as("r"))
+          .agg(sum(col("freq")).as("cnt"))
+          .orderBy(col("cnt").desc, col("l"), col("r"))
+          .limit(1).collect() // bounded: exactly one row per round
+        if (top.isEmpty) exhausted = true
+        else {
+          val (l, rt, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+          merges += ((r, l, rt, l + rt, c))
+          seg = replace(seg, lit(D + l + D + D + rt + D), lit(D + l + rt + D))
+          r += 1
+        }
       }
-    }
-    }
-    merges.toSeq.toDF("step", "left_sym", "right_sym", "merged", "pair_count")
-      .orderBy(col("step"))
+      merges.toSeq.toDF("step", "left_sym", "right_sym", "merged", "pair_count")
+    }.orderBy(col("step"))
   }
 
   /** Differential oracle for [[bpeTrain]]: the same `bpeTrainRounds`

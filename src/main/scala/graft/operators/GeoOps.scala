@@ -433,14 +433,14 @@ object GeoOps {
     // only against the CHECKPOINTED pair blocks and the CC labels, yet
     // ran as ~20 AQE query-stage driver jobs of 50-150 ms each.
     // When the pair graph measures tiny, materialize the (cluster-
-    // count-sized) census under one-job-per-action conf; at real scale
-    // the gate stays off and the lazy plan is returned unchanged.
-    graft.api.Graft.withTinyExec(spark, nPairs) {
-      val out = census.unionByName(noise)
-        .orderBy(col("n_pts").desc, col("cluster"))
-      if (graft.api.Graft.tinyExecFires(spark, nPairs)) out.localCheckpoint()
-      else out
-    }
+    // count-sized) census in a tiny scope, as one partition so the sort
+    // plans without an exchange; at real scale the plan stays lazy.
+    val tail = census.unionByName(noise)
+    val tiny = graft.api.Graft.tiny(spark, nPairs)
+    (if (tiny.isEmpty) tail
+     else graft.api.Graft.scoped(spark, s"dbscan:$nPairs", tiny)(
+       graft.api.Graft.on(_, tail).coalesce(1).localCheckpoint()))
+      .orderBy(col("n_pts").desc, col("cluster"))
   }
 
   val dbscanSql: String =
@@ -578,11 +578,12 @@ object GeoOps {
     // brandesSeeded ran as 53 driver jobs of 1-2 tasks × 10-70 ms
     // under AQE — fixed overhead on seed-bounded frontiers. The count
     // is a shuffle-free scan of the just-checkpointed pair blocks and
-    // gates the mode off at real scale (see Graft.withTinyExec).
-    val bc = graft.api.Graft.withTinyExec(spark, pairs.count()) {
-      brandesSeeded(edges, seeds)
+    // gates the mode off at real scale (see Graft.tiny).
+    val nPairs = pairs.count()
+    graft.api.Graft.scoped(spark, s"betweenness:$nPairs",
+        graft.api.Graft.tiny(spark, nPairs)) { s =>
+      brandesSeeded(graft.api.Graft.on(s, edges), graft.api.Graft.on(s, seeds))
     }
-    bc
       .orderBy(col("bc_nano").desc, col("node"))
       .limit(20)
       .select(col("node").cast("long").as("node"),

@@ -3146,7 +3146,8 @@ object Similarity {
       .filter(col("ern") === 1)
       .select(col("query_id"), col("vec_id").as("node"))
     // one beam step: candidates = beam ∪ neighbors, rescored fresh
-    def ranked(beam: DataFrame): DataFrame = {
+    def ranked(beam: DataFrame, edges: DataFrame, assigned: DataFrame,
+               q: DataFrame): DataFrame = {
       val nbr = beam.join(edges, col("node") === col("src"))
         .select(col("query_id"), col("dst").as("node"))
       val cand = beam.select(col("query_id"), col("node"))
@@ -3178,13 +3179,17 @@ object Similarity {
     // materialization per Exchange) — fixed overhead, not compute; the
     // beam itself is ≤ queries × beam·(1+edgeK) rows. The count is a
     // shuffle-free scan of the just-checkpointed assignment blocks and
-    // gates the mode off at real scale (see Graft.withTinyExec).
-    val (s1, s2, s3) = graft.api.Graft.withTinyExec(spark, assigned.count()) {
-      val a = ranked(entry).localCheckpoint()
-      val b = ranked(top(a)).localCheckpoint()
-      val c = ranked(top(b)).localCheckpoint()
-      (a, b, c)
-    }
+    // gates the mode off at real scale (see Graft.tiny).
+    val nAssigned = assigned.count()
+    val tiny = graft.api.Graft.tiny(spark, nAssigned)
+    def step(beam: DataFrame): DataFrame =
+      graft.api.Graft.scoped(spark, s"beam_search:$nAssigned", tiny) { s =>
+        def on(df: DataFrame) = graft.api.Graft.on(s, df)
+        ranked(on(beam), on(edges), on(assigned), on(q)).localCheckpoint()
+      }
+    val s1 = step(entry)
+    val s2 = step(top(s1))
+    val s3 = step(top(s2))
     // candidates-touched audit: distinct vectors whose query distance
     // was computed across the walk (each step's scored set, deduped)
     val touched = s1.select(col("query_id"), col("node"))

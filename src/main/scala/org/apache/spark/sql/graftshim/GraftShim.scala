@@ -17,6 +17,16 @@ object GraftShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A session sharing `spark`'s context, with a copy of its state. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** The session's runtime-added strategies and optimizer rules. */
+  def extraPlanning(spark: SparkSession): (Seq[AnyRef], Seq[AnyRef]) = {
+    val exp = spark.asInstanceOf[classic.SparkSession].experimental
+    (exp.extraStrategies, exp.extraOptimizations)
+  }
+
   /** The session's SQL conf (what Spark's own readers consult). */
   def sqlConf(spark: SparkSession): org.apache.spark.sql.internal.SQLConf =
     spark.asInstanceOf[classic.SparkSession].sessionState.conf
