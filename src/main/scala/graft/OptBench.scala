@@ -1,27 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Round-15 optimization harness — NOT a driver surface. Times named
-  * registered queries exactly the way Bench does (warm interleaved
-  * min-of-N of `count()`, same session configs), so a local A/B on one
-  * operator predicts its driver-bench cell; also dumps
-  * `explain("formatted")` for the plans/r15 evidence files.
+/** Optimization harness — NOT a driver surface. Times named registered
+  * queries through [[Harness.time]] with `count()`, Bench's timed
+  * action on Bench's session, so a local A/B on one operator predicts
+  * its driver-bench cell; also dumps `explain("formatted")` for the
+  * plans/ evidence files.
   *
   * Usage:
   *   runMain graft.OptBench time q1 q2 …        (OPT_RUNS, OPT_DIR env)
   *   runMain graft.OptBench explain out_dir suffix q1 q2 …
+  *   runMain graft.OptBench ab q1 q2 …          (OPT_CONF="k=v;k=v")
+  *   runMain graft.OptBench jobs q1 q2 …        (jobs + slowest stages)
+  *   runMain graft.OptBench profile q1 q2 …     (construct/plan/exec)
   */
 object OptBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val dir = sys.env.getOrElse("OPT_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     args.headOption match {
       case Some("explain") =>
         val outDir = args(1); val suffix = args(2)
@@ -36,28 +31,9 @@ object OptBench {
         }
       case Some("time") =>
         val runs = sys.env.getOrElse("OPT_RUNS", "5").toInt
-        val names = args.drop(1)
-        // same warmup as Bench
-        spark.range(1000000).selectExpr("sum(id)").collect()
-        try spark.read.parquet(s"$dir/lineitem.parquet").limit(10).collect()
-        catch { case _: Throwable => () }
-        val samples = scala.collection.mutable.Map.empty[String, List[Double]]
-          .withDefaultValue(Nil)
-        // one untimed warm pass (per-query codegen), then interleaved rounds
-        names.foreach { n =>
-          try SparkEntry.queries(n)(spark, dir).count()
-          catch { case e: Throwable => println(s"[warm] $n FAILED: ${e.getMessage}") }
-        }
-        for (_ <- 1 to runs; n <- names) {
-          val t0 = System.nanoTime()
-          try { SparkEntry.queries(n)(spark, dir).count()
-            samples(n) ::= (System.nanoTime() - t0) / 1e9 }
-          catch { case _: Throwable => () }
-        }
-        names.foreach { n =>
-          val ss = samples(n).sorted
-          if (ss.isEmpty) println(f"[time] $n FAILED")
-          else println(f"[time] $n min=${ss.head}%.3f med=${ss(ss.size / 2)}%.3f max=${ss.last}%.3f n=${ss.size}")
+        Harness.time(spark, dir, args.drop(1).toSeq, runs, _.count()).foreach { t =>
+          if (t.failed) println(s"[time] ${t.name} FAILED: ${t.error.get}")
+          else println(f"[time] ${t.name} min=${t.min}%.3f med=${t.median}%.3f max=${t.max}%.3f n=${t.samples.size}")
         }
       case Some("ab") =>
         // interleaved same-process A/B of a runtime SQL-conf set:
@@ -112,63 +88,38 @@ object OptBench {
           } else println(s"[ab] $n FAILED")
         }
         println(f"[ab] TOTAL A=$ta%.3f B=$tb%.3f ratio=${tb / ta}%.2f")
-      case Some("stages") =>
-        // per-stage breakdown of one warm execution: stage id, task
-        // count, total task time, wall duration, name — finds WHERE a
-        // query's seconds actually go
-        args.drop(1).foreach { name =>
-          SparkEntry.queries(name)(spark, dir).count() // warm
-          val stages = scala.collection.mutable.ArrayBuffer
-            .empty[(Int, Int, Long, Long, String)]
-          val jobs = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
-          val listener = new org.apache.spark.scheduler.SparkListener {
-            override def onStageCompleted(
-                sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-              val si = sc.stageInfo
-              val wall = (for {s <- si.submissionTime; c <- si.completionTime}
-                yield c - s).getOrElse(-1L)
-              stages += ((si.stageId, si.numTasks,
-                si.taskMetrics.executorRunTime, wall,
-                si.name.split(" at ").headOption.getOrElse(si.name)))
-            }
-            override def onJobEnd(
-                je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-              jobs += ((je.jobId, System.nanoTime()))
-          }
-          spark.sparkContext.addSparkListener(listener)
-          val t0 = System.nanoTime()
-          SparkEntry.queries(name)(spark, dir).count()
-          val total = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(600) // let the listener bus drain
-          spark.sparkContext.removeSparkListener(listener)
-          println(f"[stages] $name total=$total%.3f jobs=${jobs.size} stages=${stages.size}")
-          stages.sortBy(-_._4).take(12).foreach { case (id, nt, rt, wall, nm) =>
-            println(f"[stages]   stage=$id tasks=$nt taskTime=${rt}ms wall=${wall}ms $nm")
-          }
-        }
       case Some("jobs") =>
-        // every job of one warm execution: wall ms + the job group's
-        // first stage name — attributes the job-count wall (which
-        // phase of an iterative operator pays how many driver jobs)
+        // every job and the 12 slowest stages of one warm execution:
+        // job wall, stage/task counts, the `graft.scope` property a
+        // scoped step sets, and the last stage's call site
+        import org.apache.spark.scheduler._
         args.drop(1).foreach { name =>
           SparkEntry.queries(name)(spark, dir).count() // warm
-          case class J(id: Int, t0: Long, var t1: Long = -1L,
-                       var stages: Int = 0, var tasks: Int = 0,
-                       var nm: String = "")
-          val jobsB = scala.collection.mutable.LinkedHashMap.empty[Int, J]
-          val listener = new org.apache.spark.scheduler.SparkListener {
-            override def onJobStart(
-                js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-              val j = J(js.jobId, js.time)
-              j.stages = js.stageInfos.size
-              j.tasks = js.stageInfos.map(_.numTasks).sum
-              j.nm = js.stageInfos.lastOption.map(si =>
-                si.name.split(" at ").headOption.getOrElse(si.name)).getOrElse("")
-              jobsB.synchronized { jobsB(js.jobId) = j }
+          case class J(id: Int, t0: Long, stages: Int, tasks: Int,
+                       scope: String, site: String, var t1: Long = -1L)
+          case class S(id: Int, tasks: Int, taskMs: Long, wallMs: Long, site: String)
+          def site(si: StageInfo): String = si.name.split(" at ").head
+          val jobs = scala.collection.mutable.LinkedHashMap.empty[Int, J]
+          val stages = scala.collection.mutable.ArrayBuffer.empty[S]
+          val listener = new SparkListener {
+            override def onJobStart(js: SparkListenerJobStart): Unit = {
+              val scope = Option(js.properties)
+                .flatMap(p => Option(p.getProperty(graft.api.Graft.ScopeTag))).getOrElse("-")
+              val j = J(js.jobId, js.time, js.stageInfos.size,
+                js.stageInfos.map(_.numTasks).sum, scope,
+                js.stageInfos.lastOption.map(site).getOrElse(""))
+              jobs.synchronized { jobs(js.jobId) = j }
             }
-            override def onJobEnd(
-                je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-              jobsB.synchronized { jobsB.get(je.jobId).foreach(_.t1 = je.time) }
+            override def onJobEnd(je: SparkListenerJobEnd): Unit =
+              jobs.synchronized { jobs.get(je.jobId).foreach(_.t1 = je.time) }
+            override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+              val si = sc.stageInfo
+              val wall = (for (s <- si.submissionTime; c <- si.completionTime) yield c - s)
+                .getOrElse(-1L)
+              stages.synchronized {
+                stages += S(si.stageId, si.numTasks, si.taskMetrics.executorRunTime, wall, site(si))
+              }
+            }
           }
           spark.sparkContext.addSparkListener(listener)
           val total =
@@ -176,15 +127,20 @@ object OptBench {
               val t0 = System.nanoTime()
               SparkEntry.queries(name)(spark, dir).count()
               val t = (System.nanoTime() - t0) / 1e9
-              Thread.sleep(600)
+              Thread.sleep(600) // let the listener bus drain
               t
             } finally spark.sparkContext.removeSparkListener(listener)
-          val js = jobsB.synchronized(jobsB.values.toSeq)
-          println(f"[jobs] $name total=$total%.3f njobs=${js.size}")
+          val js = jobs.synchronized(jobs.values.toSeq)
+          val ss = stages.synchronized(stages.toSeq)
+          println(f"[jobs] $name total=$total%.3f njobs=${js.size} stages=${ss.size}")
           js.foreach { j =>
             // a job whose end event has not arrived has no wall time
             val wall = if (j.t1 < 0) "incomplete" else s"${j.t1 - j.t0}ms"
-            println(f"[jobs]   id=${j.id} wall=$wall stages=${j.stages} tasks=${j.tasks} ${j.nm}")
+            println(s"[jobs]   id=${j.id} wall=$wall stages=${j.stages} tasks=${j.tasks} scope=${j.scope} ${j.site}")
+          }
+          ss.sortBy(-_.wallMs).take(12).foreach { st =>
+            val wall = if (st.wallMs < 0) "incomplete" else s"${st.wallMs}ms"
+            println(s"[jobs]   stage=${st.id} tasks=${st.tasks} taskTime=${st.taskMs}ms wall=$wall ${st.site}")
           }
         }
       case Some("profile") =>
@@ -205,7 +161,7 @@ object OptBench {
           }
         }
       case other =>
-        System.err.println(s"unknown mode $other; use time|explain|profile")
+        System.err.println(s"unknown mode $other; use time|explain|ab|jobs|profile")
     }
     spark.stop()
   }

@@ -1,14 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Generates docs/PLANS.md: formatted physical plans of representative
   * queries — the evidence trail for shuffle/broadcast/pushdown choices. */
 object PlanSurvey {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val picks = Seq(
       "ref_ingest_filter" -> "reference dataflow: pushdown-only, no shuffle",
       "join_revenue_by_nation" -> "broadcast chain: 3 BroadcastHashJoins, pruned fact scan",
@@ -69,8 +64,10 @@ object PlanSurvey {
       "corpus_cooccurrence" -> "skip-gram window pairs as an EQUI join by construction: center side explodes its position by the offsets (x2 map-only fan-out)",
       "agg_bitmap_distinct" -> "bitmap-index exact distinct: per-(group, bucket) bitmap partials OR-merge associatively, popcount final — mergeable without sketch error")
     val sb = new StringBuilder
-    sb.append("# PLANS — physical plans of representative queries (sf0.001, local[4])\n\n")
-    sb.append("Generated by `graft.PlanSurvey`. Things to check in each plan:\n")
+    sb.append(s"# PLANS — physical plans of representative queries (sf0.001, ${spark.sparkContext.master})\n\n")
+    sb.append("Generated by `graft.PlanSurvey` on `Harness.session()`, the session\n")
+    sb.append("Bench and Verify run on (engine extensions installed, so native\n")
+    sb.append("functions and the HOF→native rewrite show). Things to check in each plan:\n")
     sb.append("`PushedFilters` reaching the scan, `ReadSchema` pruned to used columns,\n")
     sb.append("`BroadcastHashJoin` for dims, exchanges only where a key change demands.\n")
     picks.foreach { case (name, note) =>

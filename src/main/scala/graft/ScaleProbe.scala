@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale probe: replicates the sf0.1 tables 10× (~sf1: 6M lineitem,
-  * 500k docs, 500k vectors) and times the flagship operators at both
-  * scales. Linear (or better) scaling here is the evidence behind the
-  * 100 TB design claims — a super-linear operator flags a
+  * 500k docs, 500k vectors) and times every benched registered query
+  * at both scales. Linear (or better) scaling here is the evidence
+  * behind the 100 TB design claims — a super-linear operator flags a
   * pair-explosion or skew problem before it costs a cluster run.
   *
   * Methodology notes (each guards a way the numbers could lie):
@@ -15,14 +15,21 @@ import org.apache.spark.sql.functions._
   *    pure duplication would collapse group keys and concentrate all
   *    mass in existing buckets, turning the pair probes into a skew
   *    test of artificial data;
-  *  - every probe runs twice per scale and the SECOND run is reported,
-  *    so first-run codegen/JIT/submission overhead doesn't inflate the
-  *    small-scale denominator;
-  *  - the probe set includes a PAIR-GENERATING operator (bucketed
-  *    cosine near-dup join), not just groupBys — pair explosion is the
-  *    failure mode the probe exists to catch.
+  *  - the main table times each query to FULL output (a noop-sink
+  *    write) through [[Harness.time]]: one untimed warm pass, then
+  *    interleaved min-of-3 — `count()` would let Catalyst prune the
+  *    projections and aggregates a caller actually receives;
+  *  - the engine-stage and synthetic sections below it measure what
+  *    no registered query computes on its own (candidate mass, cap
+  *    censuses, one-hot-key depth laws, the CC fixpoint's two axes),
+  *    including a PAIR-GENERATING stage, not just groupBys — pair
+  *    explosion is the failure mode the probe exists to catch.
   *
-  * Writes docs/SCALE.md.
+  * Usage:
+  *   runMain graft.ScaleProbe                 (all benched queries + sections; writes docs/SCALE.md)
+  *   runMain graft.ScaleProbe q1 q2 …         (main table for the named queries only; prints)
+  *   runMain graft.ScaleProbe <mode>          (cc-reconcile, band-tuning, stream-state,
+  *                                             ann-headtohead, ppjoin-vs-band, cc-invariant)
   */
 object ScaleProbe {
 
@@ -114,15 +121,30 @@ object ScaleProbe {
           .select(col("name_a").as("a"), col("name_b").as("b")), "a", "b"))
     ).map { case (name, f) => val (v, n) = f(); (name, v, n) }
 
+  /** The main table: `names` timed to full output (a noop-sink write)
+    * through [[Harness.time]], interleaved min-of-3 at each scale, with
+    * each query's output rows from one untimed `count()`. A query that
+    * fails at a scale reads `FAILED` there and its error goes to stderr. */
+  private def fullOutputTable(spark: SparkSession, names: Seq[String],
+                              small: String, large: String): Seq[String] = {
+    def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+    def timed(dir: String) = Harness.time(spark, dir, names, 3, noop).map { t =>
+      t.error.foreach(e => System.err.println(s"[scale] ${t.name} failed at $dir: $e"))
+      t
+    }
+    val (ts, tl) = (timed(small), timed(large))
+    def cell(t: Harness.Timing) = if (t.failed) "FAILED" else f"${t.min}%.2f"
+    def rows(dir: String, t: Harness.Timing) =
+      if (t.failed) "-" else SparkEntry.queries(t.name)(spark, dir).count().toString
+    Seq("| query | sf0.1 s | ~sf1 s | time ratio | sf0.1 rows | ~sf1 rows |",
+      "|---|---|---|---|---|---|") ++ ts.zip(tl).map { case (a, b) =>
+      val ratio = if (a.failed || b.failed) "-" else f"${b.min / a.min}%.1fx"
+      s"| ${a.name} | ${cell(a)} | ${cell(b)} | $ratio | ${rows(small, a)} | ${rows(large, b)} |"
+    }
+  }
+
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.VectorFunctions.register(spark)
+    val spark = Harness.session()
     val sf01 = "/root/testdata/sf0.1"
     val big = "/tmp/graft_sf1_v2"
 
@@ -177,21 +199,6 @@ object ScaleProbe {
     if (args.contains("cc-reconcile")) {
       ccReconcile(spark, sf01, big); spark.stop(); return
     }
-    if (args.contains("dbscan-probe")) {
-      def t(dir: String): Double = {
-        val t0 = System.nanoTime()
-        graft.operators.GeoOps.dbscan(spark, dir).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      t(sf01) // warm: per-round codegen
-      val s = (1 to 3).map(_ => t(sf01)).min
-      val l = (1 to 3).map(_ => t(big)).min
-      println(f"dbscan_end_to_end sf0.1 ${s}%.2f s, ~sf1 ${l}%.2f s, ratio ${l / s}%.1fx")
-      spark.stop(); return
-    }
-    // time named registered queries: `q <name> [<name>…]`, min-of-3
-    // warm at sf0.1 (and ~sf1 when the replica exists) — the local
-    // stand-in for one driver-bench cell when iterating on one op
     // ---- banding parameter tuning (r13 verdict #5): make (bands,
     // rows) a MEASURED decision. For each (b, r) config the probe
     // builds a generic banded-minhash candidate stage (band j, row i
@@ -333,69 +340,6 @@ object ScaleProbe {
       println(sb.toString)
       spark.stop(); return
     }
-    if (args.headOption.contains("friedman-stages")) {
-      def t(label: String, f: () => Long): Unit = {
-        f()
-        val s = (1 to 3).map { _ =>
-          val t0 = System.nanoTime(); val n = f()
-          ((System.nanoTime() - t0) / 1e9, n)
-        }
-        println(f"$label: ${s.map(_._1).min}%.2f s (${s.head._2} rows)")
-      }
-      val o = Tables.orders(spark, big)
-      t("scan_count", () => o.count())
-      t("agg_custkey", () => o.groupBy(col("o_custkey"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long"))).count())
-      t("agg_month_str", () => o.groupBy(
-        date_format(col("o_orderdate"), "yyyy-MM"),
-        substring(col("o_orderpriority"), 1, 1))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long"))).count())
-      t("agg_month_trunc", () => o.groupBy(
-        date_trunc("month", col("o_orderdate")),
-        substring(col("o_orderpriority"), 1, 1))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long"))).count())
-      t("friedman_full", () =>
-        graft.operators.StatsOps.friedman(spark, big).count())
-      spark.stop(); return
-    }
-    if (args.headOption.contains("rangecell-stages")) {
-      import graft.operators.Joins
-      def t(label: String, f: () => Long): Unit = {
-        f() // warm
-        val s = (1 to 3).map { _ =>
-          val t0 = System.nanoTime(); val n = f()
-          ((System.nanoTime() - t0) / 1e9, n)
-        }
-        println(f"$label: ${s.map(_._1).min}%.2f s (${s.head._2} rows)")
-      }
-      val winNs = 3600L * 1000L * 1000L * 1000L
-      val ev = Tables.events(spark, sf01)
-      val err = ev.filter(col("event_type") === "error")
-        .select(col("event_id").as("err_id"), col("user_id").as("err_user"),
-          col("ts_ns").as("err_ts"))
-      val errx = err.withColumn("err_cell", explode(sequence(
-        expr(s"err_ts div ${winNs}L"), expr(s"(err_ts + ${winNs}L) div ${winNs}L"))))
-      val fol = ev.select(col("event_id"), col("user_id"), col("ts_ns"), col("value"),
-        expr(s"ts_ns div ${winNs}L").as("cell"))
-      t("err_explode", () => errx.count())
-      t("fol_cells", () => fol.count())
-      val joined = errx.join(fol,
-        col("err_user") === col("user_id") && col("err_cell") === col("cell") &&
-          col("ts_ns") > col("err_ts") && col("ts_ns") <= col("err_ts") + lit(winNs))
-      t("join_only", () => joined.count())
-      t("full_cell", () => Joins.rangeJoinEventsCell(spark, sf01).count())
-      t("full_naive", () => Joins.rangeJoinEvents(spark, sf01).count())
-      spark.stop(); return
-    }
-    // print a registered query's formatted physical plan at sf0.1 —
-    // the local .explain("formatted") loop the build guide asks for
-    if (args.headOption.contains("explain")) {
-      args.drop(1).foreach { name =>
-        println(s"==== $name ====")
-        SparkEntry.queries(name)(spark, sf01).explain("formatted")
-      }
-      spark.stop(); return
-    }
     if (args.headOption.contains("stream-state")) {
       graft.streaming.StreamStateProbe.run(spark)
         .foreach(l => println(s"[stream-state] $l"))
@@ -408,32 +352,10 @@ object ScaleProbe {
       }
       spark.stop(); return
     }
-    if (args.headOption.contains("q")) {
-      args.drop(1).foreach { name =>
-        val fn = SparkEntry.queries(name)
-        def t(dir: String): Double = {
-          val t0 = System.nanoTime(); fn(spark, dir).collect()
-          (System.nanoTime() - t0) / 1e9
-        }
-        t(sf01)
-        val s = (1 to 3).map(_ => t(sf01)).min
-        val l = (1 to 3).map(_ => t(big)).min
-        println(f"[q] $name sf0.1 $s%.2f s, ~sf1 $l%.2f s, ratio ${l / s}%.1fx")
-      }
-      spark.stop(); return
-    }
     if (args.headOption.contains("ppjoin-vs-band")) {
       Seq(sf01, big).foreach { dir =>
         graft.operators.Dedup.ppjoinVsBandProbe(spark, dir)
           .foreach(l => println(s"[$dir] $l"))
-      }
-      spark.stop(); return
-    }
-    if (args.contains("ppjoin-stages")) {
-      Seq(sf01, big).foreach { dir =>
-        graft.operators.Dedup.ppjoinStageProbe(spark, dir).foreach {
-          case (st, secs, n) => println(f"[$dir] $st: $secs%.2f s ($n rows)")
-        }
       }
       spark.stop(); return
     }
@@ -446,13 +368,14 @@ object ScaleProbe {
       }
       spark.stop(); return
     }
-    if (args.contains("dbscan-stages")) {
-      Seq(sf01, big).foreach { dir =>
-        graft.operators.GeoOps.dbscanStageProbe(spark, dir).foreach {
-          case (st, secs, n) => println(f"[$dir] $st: $secs%.2f s ($n rows)")
-        }
-      }
-      spark.stop(); return
+
+    // the main table: every benched registered query, or only the named ones
+    val names =
+      if (args.nonEmpty) args.toSeq
+      else SparkEntry.queries.keys.filterNot(Bench.benchExclude).toSeq.sorted
+    val mainTable = fullOutputTable(spark, names, sf01, big)
+    if (args.nonEmpty) {
+      mainTable.foreach(println); spark.stop(); return
     }
 
     def timeSecond(f: () => Long): (Double, Long) = {
@@ -518,14 +441,6 @@ object ScaleProbe {
       ("ngram_dropped_buckets_cap64", () =>
         graft.api.Graft.oversizedBandBuckets(
           graft.Tables.documents(spark, dir), "text", "doc_id", 3, 4, 64).count()),
-      // incremental batch-vs-index dedup: index build is one groupBy
-      // over the 80% corpus slice, the probe is an equi join driven by
-      // the 20% batch slice — both sides scale linearly with the
-      // corpus here, so the time ratio must stay ~linear; in
-      // production the index is PRE-BUILT and only the batch term
-      // remains (Dedup.incrementalDedup)
-      ("incremental_dedup", () =>
-        graft.operators.Dedup.incrementalDedup(spark, dir).count()),
       // IVF nearest-centroid assignment at the CORPUS-DERIVED k
       // (k = ceil(N/64), the SemDeDup fixed-cell-size policy): the
       // map-only native-codegen argmax over literal centroids does
@@ -574,24 +489,6 @@ object ScaleProbe {
             graft.operators.Similarity.pqCbLiteral(
               graft.operators.Similarity.pqCodebookRows(spark, dir)))
           .filter(size(col("codes")) > 0).count()),
-      // corpus-global span dedup (corpus_line_dedup): explode to
-      // ~tokens/W span rows, ONE shuffle on the span key, reassemble.
-      // Replicated docs carry a distinguishing copytoken, so only
-      // in-document and cross-copy coincidental spans collide —
-      // result rows = doc count by construction; the TIME row is the
-      // linearity evidence (span shuffle volume ∝ corpus tokens)
-      ("line_dedup_spans", () =>
-        graft.operators.CorpusOps.lineDedup(spark, dir).count()),
-      // A-ES weighted sampling: result is k rows at ANY corpus size —
-      // the probe times the map-only key pass + per-partition top-k
-      // (TakeOrderedAndProject; no global sort to grow super-linearly)
-      ("weighted_sample_topk", () =>
-        graft.operators.CorpusOps.sampleWeighted(spark, dir).count()),
-      // BM25 lexical ranking: the query-term IN filter runs under the
-      // tf aggregate, so the shuffle carries only matching (doc, term)
-      // rows — time must track the SCAN, not the corpus×vocab explode
-      ("bm25_query_scan", () =>
-        graft.operators.TextAnalysis.bm25TopK(spark, dir).count()),
       // PageRank over the kNN graph — the iteration loop at a
       // DATA-SIZED edge list (the types-graph query proves parity;
       // this row proves the loop's two-shuffles-per-round cost
@@ -602,314 +499,7 @@ object ScaleProbe {
           graft.api.Graft.knnGraph(spark,
               Tables.embeddings(spark, dir), "vec_id", "embedding", 5)
             .select(col("src"), col("neighbor_id").as("dst"), lit(1L).as("w")),
-          iterations = 3).count()),
-      // DSIR importance weights: two linear corpus scans (one
-      // conditional agg training both fixed-k models, one probe pass
-      // over the broadcast model) — nothing here may grow faster than
-      // the token count, so the time ratio must stay ~linear
-      ("dsir_weights", () =>
-        graft.operators.CorpusOps.dsirWeights(spark, dir).count()),
-      // hard-negative mining: the kNN-graph cell join re-used with two
-      // anchor-keyed windows; with k ∝ N the in-cell pair mass is
-      // linear (semantic_candidate_mass above is the shared shape
-      // evidence), so mining time must track it, never all-pairs
-      ("hard_negative_triplets", () =>
-        graft.operators.Similarity.hardNegatives(spark, dir).count()),
-      // sparse TF-IDF cosine: the inverted-index join whose hazard is
-      // posting-list length L (pairs = L² per term). The per-term
-      // posting cap (256, weight-ranked, oracle-replicated) bounds
-      // pair work at cap²·|vocab| REGARDLESS of corpus size — the 10×
-      // corpus must NOT cost ~100× (what uncapped L² would do on this
-      // small-vocab worst-case corpus); result rows stay cap-bounded
-      ("sparse_cosine_capped", () =>
-        graft.operators.TextAnalysis.sparseCosine(spark, dir).count()),
-      // BPE merge-rule training: ONE corpus scan builds the
-      // Zipf-bounded word-frequency table (checkpointed), then every
-      // round iterates on that compact table — 10× corpus pays the
-      // scan once and the rounds stay vocabulary-priced, so the time
-      // ratio must sit far below the data ratio
-      ("bpe_train_8rounds", () =>
-        graft.operators.CorpusOps.bpeTrain(spark, dir).count()),
-      // sessionization at 10× PER-USER history depth (user population
-      // fixed — the adversarial direction for user-keyed windows): the
-      // island-numbering windows sort each user's events once, so cost
-      // must track rows (n log n in partition depth), never pairs
-      ("sessionize_deep_users", () =>
-        graft.operators.Windows.sessionize(spark, dir).count()),
-      // OLS moment sums: algebraic partials → map-side combine does
-      // the work; 10× rows must cost ~scan time
-      ("linreg_moments", () =>
-        graft.operators.Aggregations.linReg(spark, dir).count()),
-      // market basket: pairs are basket-bounded (b(b-1)/2 per order) —
-      // 10× MORE baskets of the SAME size must scale ~linearly, the
-      // claim that separates this from an all-pairs co-occurrence
-      ("basket_pairs", () =>
-        graft.operators.Analytics.marketBasket(spark, dir).count()),
-      // PCA sufficient statistics + bounded driver iteration: the
-      // corpus pays ONE moment pass (d²/2 integer accumulators,
-      // map-side combined); the matvec rounds touch a 64×64 matrix —
-      // 10× rows must cost ~the scan, never more
-      ("pca_power_iteration", () =>
-        graft.operators.Similarity.pcaTopComponent(spark, dir).count()),
-      // grid-bucketed interval join: BOTH event sides grow 10x inside
-      // the SAME one-month window, so true match pairs grow ~100x BY
-      // CONSTRUCTION (denser time axis) — result rows carry that;
-      // the plan-shape claim is that TIME tracks the matched-pair
-      // mass through one equi shuffle, never the N*M nested loop
-      ("grid_range_join", () =>
-        graft.operators.Joins.gridRangeJoin(spark, dir).count()),
-      // item-item CF: 10x more baskets of the SAME size — the
-      // basket-bounded pair stage must scale ~linearly (the same
-      // claim as basket_pairs, here through the min-co-occurrence
-      // prune + rank window end-to-end)
-      ("item_cf_topk", () =>
-        graft.operators.Analytics.itemCf(spark, dir).count()),
-      // PPJoin prefix-filter set-similarity join: replicas are
-      // near-dups of each other, so true pairs grow ~45x per
-      // copy-cluster by construction; the evidence is that time
-      // tracks CANDIDATES (rare-prefix-token fan-out), not all-pairs
-      ("ppjoin_pairs", () =>
-        graft.operators.Dedup.ppjoin(spark, dir).count()),
-      // k-core over the fuzzy-name graph: the peel sees the
-      // DISTINCT-NAME dictionary, not the row stream — 10x part rows
-      // with the same names must cost ~flat (the dictionary-first
-      // design claim measured)
-      ("kcore_fuzzy_dict", () =>
-        graft.operators.GraphOps.kCore(spark, dir).count()),
-      // negative sampling: draws grow with docs (4/doc), the CDF is
-      // vocab-capped (1024) — both the model build and the grid
-      // lookup must scale ~linearly in the corpus
-      ("negative_samples", () =>
-        graft.operators.CorpusOps.negativeSamples(spark, dir).count()),
-      // hashing-trick featurizer: two compact-key aggs — pure scan
-      ("hash_embed", () =>
-        graft.operators.TextAnalysis.hashEmbed(spark, dir).count()),
-      // ---- round-9 additions ----
-      // RFM: the data-sized stage is the orders agg (map-side
-      // combinable on o_custkey); the three ntile windows run on the
-      // 1000x-smaller customer table — 10x orders must cost ~scan
-      ("rfm_segments", () =>
-        graft.operators.Analytics.rfm(spark, dir).count()),
-      // Kaplan-Meier: the sessionize lag window over 10x deeper
-      // per-user history is the hard direction (same axis as
-      // sessionize_deep_users); the KM fold itself is on the
-      // duration-bounded period spine — cost must track the window
-      // scan, result rows the (bounded) period count
-      ("survival_km", () =>
-        graft.operators.Analytics.survival(spark, dir).count()),
-      // running distinct count: two windows sharing one user-keyed
-      // exchange over 10x deeper history; output is the discovery
-      // change-log, bounded by users x types, NOT by events
-      ("running_distinct", () =>
-        graft.operators.Windows.runningDistinct(spark, dir).count()),
-      // bitemporal as-of: two row_number windows on the same
-      // user-keyed exchange; 10x deeper history, same user population
-      // -> ~scan cost, constant result rows (one per user)
-      ("bitemporal_asof", () =>
-        graft.operators.WarehouseEtl.bitemporal(spark, dir).count()),
-      // MMR re-rank: candidate generation is the |Q|-bounded
-      // broadcast scan (rel top-10 per query); the greedy stage is
-      // O(k*c^2) per query INDEPENDENT of corpus size — 10x corpus
-      // must cost ~the candidate scan, result rows constant (3|Q|)
-      ("mmr_rerank", () =>
-        graft.operators.Similarity.mmrRerank(spark, dir).count()),
-      // hourly-rate series family (ACF/EWMA/level-shift share the
-      // spine): the data-sized stage is ONE compact-key hourly count
-      // (calendar-bounded output) — 10x events must cost ~scan and
-      // the series length must stay flat
-      ("hourly_series_acf", () =>
-        graft.operators.TimeSeries.acf(spark, dir).count()),
-      // skip-gram co-occurrence: x2 offset fan-out then equi join on
-      // (doc, position) — pair rows are 2x token count BY
-      // CONSTRUCTION (never per-doc quadratic), so 10x docs must cost
-      // ~linearly and the realized-pair agg must stay Zipf-compact
-      ("cooccurrence_pairs", () =>
-        graft.operators.CorpusOps.cooccurrence(spark, dir).count()),
-      // binary-sketch Hamming scan: |Q| broadcast x N packed-long
-      // rows, popcount(xor) per comparison — pure integer ALU, must
-      // track the scan (the 16x-compression serving filter)
-      ("hamming_scan", () =>
-        graft.operators.Similarity.hammingTopK(spark, dir).count()),
-      // weighted median: one group-key exchange + in-group sort
-      // window — n log n in group depth, the winsorize cost model
-      ("weighted_median", () =>
-        graft.operators.Aggregations.weightedMedian(spark, dir).count()),
-      // bitmap-index distinct: two compact-key aggs (bucketed bitmaps
-      // then popcount merge) — the mergeable exact distinct path must
-      // cost ~scan at any corpus size
-      ("bitmap_distinct", () =>
-        graft.operators.Aggregations.bitmapDistinct(spark, dir).count()),
-      // ---- round-10 additions ----
-      // Gini on the value histogram: the data-sized stage is the
-      // per-customer orders agg; the ordered window sees only
-      // DISTINCT cents values — 10x orders must cost ~scan
-      ("gini_histogram", () =>
-        graft.operators.StatsOps.gini(spark, dir).count()),
-      // Mann-Whitney midranks ride the same distinct-cents histogram
-      ("mann_whitney_hist", () =>
-        graft.operators.StatsOps.mannWhitney(spark, dir).count()),
-      // CMS build is one map-side-combinable agg into d*w=1024 cells;
-      // 10x rows must cost ~scan, sketch size constant by definition
-      ("cms_sketch_build", () =>
-        graft.operators.StatsOps.cmsTopK(spark, dir).count()),
-      // Theil-Sen pairs are capped by the 336-bin calendar slice: the
-      // replica spans the SAME weeks, so pair count must stay FLAT
-      // and time ~the hourly-count scan
-      ("theil_sen_bounded", () =>
-        graft.operators.StatsOps.theilSen(spark, dir).count()),
-      // deletion-neighborhood edit join: replica names are true
-      // cross-copy distance-1 neighbors (pairs GROW by construction);
-      // the claim is time tracks the masked equi join's candidate
-      // mass (digit-domain-capped buckets), never |names|^2
-      ("edit_distance_blocked", () =>
-        graft.operators.Joins.editDistanceJoin(spark, dir).count()),
-      // bipartite projection: 10x baskets of the SAME size -> pair
-      // mass and time ~linear (the basket_pairs claim end-to-end
-      // through the degree joins)
-      ("bipartite_projection", () =>
-        graft.operators.GraphOps.bipartiteProject(spark, dir).count()),
-      // ratio-to-report: broadcast dim chain + compact nation agg —
-      // 10x facts must cost ~scan, window table constant
-      ("ratio_to_report", () =>
-        graft.operators.Windows.ratioToReport(spark, dir).count()),
-      // skyline: one per-brand window over 10x part rows (n log n in
-      // partition depth); duplicate (price,size) points collapse to
-      // the first key, so result rows stay ~flat
-      ("pareto_skyline", () =>
-        graft.operators.Windows.paretoFrontier(spark, dir).count()),
-      // leave-one-out z: three unordered window sums sharing one
-      // group exchange — ~scan cost, top-20 output constant
-      ("peer_zscore_loo", () =>
-        graft.operators.Windows.peerZscore(spark, dir).count()),
-      // two-pass late-dim resolve: pass 1 is the broadcast left join;
-      // pass 2 rescans only the unknown slice (~1% of facts) — total
-      // must track facts, result rows constant (priorities)
-      ("late_dim_backfill", () =>
-        graft.operators.WarehouseEtl.lateDim(spark, dir).count()),
-      // windowed top-k: compact (window,type) agg + WindowGroupLimit
-      // over the bounded agg table — ~scan cost
-      ("windowed_topk", () =>
-        graft.streaming.Streams.topkWindowBatch(spark, dir).count()),
-      // vector-arith retrieval: 1-row broadcast compose + the
-      // brute-force cosine scan — time must track the embedding scan
-      ("vector_arith_scan", () =>
-        graft.operators.Similarity.vectorArith(spark, dir).count()),
-      // Benford census: one compact digit agg — pure scan cost
-      ("benford_digits", () =>
-        graft.operators.StatsOps.benford(spark, dir).count()),
-      // periodogram: three window-free aggs over the calendar-bounded
-      // hourly series — 10x events must cost ~the hourly-count scan
-      ("periodogram_dft", () =>
-        graft.operators.TimeSeries.periodogram(spark, dir).count()),
-      // segment migration: two per-customer aggs + customer-sized
-      // ntile windows (the rfm trade) — 10x orders must cost ~scan
-      ("segment_migration", () =>
-        graft.operators.Analytics.segmentMigration(spark, dir).count()),
-      // HDR sketch: compact (e,sb) census (<= ~26*16 cells) + the
-      // exact distinct-cents twin — both histogram-priced, ~scan
-      ("hdr_percentiles", () =>
-        graft.operators.StatsOps.hdrPercentiles(spark, dir).count()),
-      // CDC chunking: one shingle-hash scan + doc-keyed flag window —
-      // 10x docs must cost ~linearly (the sessionize shape)
-      ("cdc_chunking", () =>
-        graft.operators.Dedup.cdcChunking(spark, dir).count()),
-      // STL: two calendar-bounded windows + a 24-row profile join —
-      // cost must track the hourly-count scan
-      ("stl_decompose", () =>
-        graft.operators.TimeSeries.stlDecompose(spark, dir).count()),
-      // RAKE: stoplist is a capped top-20 agg, islands a doc-keyed
-      // window, scores two compact-key aggs — ~token-linear
-      ("rake_keywords", () =>
-        graft.operators.TextAnalysis.rakeKeywords(spark, dir).count()),
-      // ML eval: AUC reduces through the bounded score histogram
-      // (≤1e6 keys however large the pool) — cost must track the one
-      // map-side-combinable scan, not the ordered midrank window
-      ("ml_auc_histogram", () =>
-        graft.operators.MlEval.auc(spark, dir).count()),
-      // gain chart is the family's one data-sized sort (range
-      // partitioned); ~n log n is the acceptable envelope here
-      ("ml_gain_sort", () =>
-        graft.operators.MlEval.gainDeciles(spark, dir).count()),
-      // propensity matching runs entirely in score space after ONE
-      // per-score conditional agg — the r10 probe caught the original
-      // row-level formulation recomputing the scored pool 4x (13x
-      // time at 10x rows); this row pins the single-pass rewrite flat
-      ("propensity_score_space", () =>
-        graft.operators.MlEval.propensityMatch(spark, dir).count()),
-      // naive Bayes: one token explode into a compact (token) agg +
-      // a |C|-bounded (doc, class) agg — 10x docs must cost ~scan,
-      // the vocab cap (128) keeps the model broadcast-sized
-      ("naive_bayes_e2e", () =>
-        graft.operators.TextAnalysis.naiveBayes(spark, dir).count()),
-      // random walks: hops are equi joins on RANK-INDEXED edge
-      // tables (never a neighbor-list fan-out); r14 — the bounded
-      // frontier (20 starts x 8 walks) is collected and pushed down
-      // as IN filters, so the only data-sized stages left are ONE
-      // distinct shuffle and one combinable degree agg (was: two full
-      // rank windows + two degree aggs, 3.1x at 10x)
-      ("random_walk_rank_hops", () =>
-        graft.operators.GraphOps.randomWalk(spark, dir).count()),
-      // Poisson bootstrap: the x64 map-side fan-out into a 64-key
-      // combinable agg — the honest bootstrap cost, must stay ~64x
-      // scan-linear with NO shuffle growth (output is 64 keys)
-      ("bootstrap_64x_fanout", () =>
-        graft.operators.StatsOps.bootstrapCi(spark, dir).count()),
-      // JPEG marker walk: prefix decoded to an int array once, then
-      // one COLUMN per walk step (the construction-time expression-
-      // duplication lesson: a single folded Column cost ~28 s of
-      // data-size-independent Catalyst analysis) — must be ~scan
-      ("jpeg_marker_walk", () =>
-        graft.operators.Multimodal.jpegHeader(spark, dir).count()),
-      // r11: the histogram-ntile family — formerly data-sized
-      // single-partition sorts (win_ntile measured 4.9x at 10x in
-      // BENCH_r10_sf1); on the HistQuantile path only the
-      // distinct-value table sorts, so the ratio must track the
-      // VALUE-DOMAIN growth, not the row growth
-      ("hist_ntile_quartiles", () =>
-        graft.operators.Windows.ntileQuartiles(spark, dir).count()),
-      ("hist_eqdepth_buckets", () =>
-        graft.operators.Aggregations.histogramEqDepth(spark, dir).count()),
-      ("hist_gain_deciles", () =>
-        graft.operators.MlEval.gainDeciles(spark, dir).count()),
-      ("hist_pareto_gini", () =>
-        graft.operators.Analytics.pareto(spark, dir).count()),
-      // r11: codec prefix decode — flat per-row cost must stay ~scan
-      // after the hex-once/split fix (the lambda re-evaluation bug
-      // cost ~1 ms/row before)
-      ("codec_prefix_bmp", () =>
-        graft.operators.Multimodal.bmpHeader(spark, dir).count()),
-      // r11: rank statistics without global sorts — midrank
-      // histograms (spearman) and the x64 multinomial relabel (BH)
-      ("spearman_midranks", () =>
-        graft.operators.StatsOps.spearman(spark, dir).count()),
-      ("bh_fdr_64x_fanout", () =>
-        graft.operators.StatsOps.bhFdr(spark, dir).count()),
-      ("coverage_curve_fof", () =>
-        graft.operators.TextAnalysis.coverageCurve(spark, dir).count()),
-      ("event_transitions", () =>
-        graft.operators.Analytics.eventTransitions(spark, dir).count()),
-      // r11 batch 2: DBSCAN end-to-end — the √n-scaled domain keeps
-      // eps-degree subcritical, so pair mass AND the CC fixpoint's
-      // component sizes must grow ~linearly with rows, never
-      // quadratically (the percolation argument in GeoOps.dbscan's
-      // scaladoc, measured here)
-      ("dbscan_end_to_end", () =>
-        graft.operators.GeoOps.dbscan(spark, dir).count()),
-      // r11 batch 2: min-hop BFS over the same eps-graph — frontier
-      // expansion is 3 key-partitioned joins; cost tracks the pair
-      // list, seeds stay a bounded id slice
-      ("khop_reach_bfs", () =>
-        graft.operators.GeoOps.khopReach(spark, dir).count()),
-      // r11 batch 2: LM scoring joins — model tables are Zipf-bounded
-      // (distinct n-grams grow sublinearly in the replica corpus), so
-      // the scoring cost must track the held-out trigram row count
-      ("trigram_backoff_scoring", () =>
-        graft.operators.CorpusOps.trigramBackoff(spark, dir).count()),
-      // r11 batch 2: the FK audit — five distinct-key censuses + key
-      // joins; the lineitem edges dominate and must scale with the
-      // fact table's DISTINCT KEYS, not its rows
-      ("referential_integrity_5edges", () =>
-        graft.operators.WarehouseEtl.referentialIntegrity(spark, dir).count())
+          iterations = 3).count())
     ).map { case (name, f) =>
       val (secs, n) = timeSecond(f)
       (name, secs, n)
@@ -1100,19 +690,25 @@ object ScaleProbe {
     val small = probes(sf01)
     val large = probes(big)
     val sb = new StringBuilder
-    sb.append(s"# SCALE — 10x scaling probe (sf0.1 -> ~sf1, local[$cpus])\n\n")
-    sb.append("Generated by `graft.ScaleProbe` (see its scaladoc for methodology:\n")
-    sb.append("perturbed replicas, best-of-5 warm timings, pair-generating probe\n")
-    sb.append("included). 10x rows should cost <= ~10x time for the row-linear\n")
-    sb.append("operators; `bucketed_cosine_pairs` is pair-quadratic WITHIN buckets,\n")
+    sb.append(s"# SCALE — 10x scaling probe (sf0.1 -> ~sf1, ${spark.sparkContext.master})\n\n")
+    sb.append("Generated by `graft.ScaleProbe` (see its scaladoc for methodology).\n")
+    sb.append("The main table times every benched registered query to FULL output\n")
+    sb.append("(noop-sink write, `Harness.time`: warm pass + interleaved min-of-3)\n")
+    sb.append("on perturbed 10x replicas; output rows come from one untimed\n")
+    sb.append("`count()`. 10x rows should cost <= ~10x time for the row-linear\n")
+    sb.append("operators. Sub-second rows are dominated by fixed job-submission\n")
+    sb.append("overhead at BOTH scales, so a ratio at or below ~1x means the\n")
+    sb.append("operator's compute is beneath the noise floor — the asymptotic\n")
+    sb.append("evidence is the output-rows growth plus any row whose ratio\n")
+    sb.append("approaches the data ratio.\n\n")
+    mainTable.foreach(l => sb.append(l).append("\n"))
+    sb.append("\n## Engine-stage probes (best-of-5 warm `count()`)\n\n")
+    sb.append("Stages and API calls no registered query computes on its own:\n")
+    sb.append("signature/bucket censuses, candidate mass before any threshold,\n")
+    sb.append("the cap64 drop census, PQ encoding, PageRank on a data-sized kNN\n")
+    sb.append("graph. `bucketed_cosine_pairs` is pair-quadratic WITHIN buckets,\n")
     sb.append("so its budget is bounded by bucket balance — watch its group count.\n\n")
-    sb.append("Reading the ratios: sub-second rows are dominated by fixed\n")
-    sb.append("job-submission overhead at BOTH scales on local[32] (sf0.1 does not\n")
-    sb.append("saturate 32 cores), so a ratio at or below ~1x means the operator's\n")
-    sb.append("compute is beneath the noise floor — the asymptotic evidence is the\n")
-    sb.append("result-rows growth (e.g. candidate pairs vs the all-pairs bound),\n")
-    sb.append("plus any row whose ratio approaches the data ratio.\n\n")
-    sb.append("| operator | sf0.1 s | ~sf1 s | time ratio | sf0.1 result rows | ~sf1 result rows |\n|---|---|---|---|---|---|\n")
+    sb.append("| probe | sf0.1 s | ~sf1 s | time ratio | sf0.1 result rows | ~sf1 result rows |\n|---|---|---|---|---|---|\n")
     small.zip(large).foreach { case ((n, s1, c1), (_, s2, c2)) =>
       sb.append(f"| $n | $s1%.2f | $s2%.2f | ${s2 / s1}%.1fx | $c1 | $c2 |\n")
     }

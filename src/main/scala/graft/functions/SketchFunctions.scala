@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 
@@ -12,16 +11,12 @@ import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expre
   * same bytes `DataFrame.stat.bloomFilter(...).writeTo` produces.
   * Exposing it as a function lets a pipeline author hand-plant a
   * pre-shuffle row filter when the optimizer's size heuristics
-  * wouldn't inject one (see Joins.bloomPrunedJoin). */
+  * wouldn't inject one (see Joins.bloomPrunedJoin). Registered with
+  * the rest of the native functions ([[VectorFunctions.all]]). */
 object SketchFunctions {
 
   val mightContainInfo = (
     new FunctionIdentifier("graft_bloom_might_contain"),
     new ExpressionInfo(classOf[BloomFilterMightContain].getName, "graft_bloom_might_contain"),
     (children: Seq[Expression]) => BloomFilterMightContain(children(0), children(1)))
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.registerFunction(mightContainInfo._1, mightContainInfo._2, mightContainInfo._3)
-  }
 }

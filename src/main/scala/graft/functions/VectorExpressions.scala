@@ -706,24 +706,19 @@ object VectorFunctions {
     new ExpressionInfo(classOf[SortedIntersectCount].getName, "graft_sorted_inter_count"),
     (children: Seq[Expression]) => SortedIntersectCount(children(0), children(1)))
 
+  /** Every native function the engine defines, once. Both
+    * registration paths iterate this list: [[graft.plans.GraftExtensions]]
+    * injects it at session build, and [[register]] adds it to a session
+    * built without the extension. */
+  val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    dotInfo, normInfo, lshInfo, simhashInfo, minhashInfo, argmaxInfo,
+    pqEncodeInfo, pqDecodeInfo, cellResidualInfo, cellAddInfo, sortedInterInfo,
+    SketchFunctions.mightContainInfo, BpeFunctions.bpeCountInfo, BpeFunctions.bpePiecesInfo)
+
   /** Imperative session-scoped registration — lets any session use the
     * functions even when it wasn't built with GraftExtensions. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.registerFunction(dotInfo._1, dotInfo._2, dotInfo._3)
-    reg.registerFunction(normInfo._1, normInfo._2, normInfo._3)
-    reg.registerFunction(lshInfo._1, lshInfo._2, lshInfo._3)
-    reg.registerFunction(simhashInfo._1, simhashInfo._2, simhashInfo._3)
-    reg.registerFunction(minhashInfo._1, minhashInfo._2, minhashInfo._3)
-    reg.registerFunction(argmaxInfo._1, argmaxInfo._2, argmaxInfo._3)
-    reg.registerFunction(pqEncodeInfo._1, pqEncodeInfo._2, pqEncodeInfo._3)
-    reg.registerFunction(pqDecodeInfo._1, pqDecodeInfo._2, pqDecodeInfo._3)
-    reg.registerFunction(cellResidualInfo._1, cellResidualInfo._2, cellResidualInfo._3)
-    reg.registerFunction(cellAddInfo._1, cellAddInfo._2, cellAddInfo._3)
-    reg.registerFunction(sortedInterInfo._1, sortedInterInfo._2, sortedInterInfo._3)
-    reg.registerFunction(BpeFunctions.bpeCountInfo._1,
-      BpeFunctions.bpeCountInfo._2, BpeFunctions.bpeCountInfo._3)
-    reg.registerFunction(BpeFunctions.bpePiecesInfo._1,
-      BpeFunctions.bpePiecesInfo._2, BpeFunctions.bpePiecesInfo._3)
+    all.foreach { case (id, info, builder) => reg.registerFunction(id, info, builder) }
   }
 }

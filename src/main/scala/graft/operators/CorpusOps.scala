@@ -1033,7 +1033,7 @@ object CorpusOps {
     * why the same oracle checks both: the sketch changes the plan,
     * never the answer. */
   def decontaminateBloom(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.SketchFunctions.register(spark)
+    graft.functions.VectorFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val evalNg = docs.filter(col("doc_id") % 20 === 0)
       .select(explode(graft.api.Graft.shingles(col("text"), 4)).as("__ng")).distinct()

@@ -839,36 +839,6 @@ object Dedup {
       .filter(col("jac_raw") >= t)
   }
 
-  /** Stage-level timing/cardinality for [[ppjoin]] (ScaleProbe
-    * `ppjoin-stages`): prefix stream size, raw candidate matches
-    * (pre-group-filter), filtered candidates, verified pairs. The
-    * input scan+shingle is materialized UNTIMED (shared by every
-    * stage); each later stage is a LAZY `localCheckpoint(false)` whose
-    * timed count() is what materializes it — so each stage's reported
-    * seconds measure that stage's own work over the already-
-    * materialized previous stage (r12 advice: the old EAGER
-    * checkpoints materialized at definition, so the timed counts
-    * measured nothing). raw_matches is the one exception — it is not
-    * checkpointed (too large to be worth materializing), so the
-    * filtered_candidates row re-runs the join; its seconds therefore
-    * measure join + group filter together. */
-  private[graft] def ppjoinStageProbe(spark: SparkSession, dir: String)
-      : Seq[(String, Double, Long)] = {
-    val t = 0.5
-    def tm(label: String, f: => Long): (String, Double, Long) = {
-      val t0 = System.nanoTime(); val n = f
-      (label, (System.nanoTime() - t0) / 1e9, n)
-    }
-    val docs = ppjoinDocs(spark, dir).localCheckpoint()
-    val pre = ppjoinPrefix(docs, t).localCheckpoint(false)
-    val r1 = tm("prefix_stream", pre.count())
-    val r2 = tm("raw_matches", ppjoinRawMatches(pre, t).count())
-    val cand = ppjoinCandidates(ppjoinRawMatches(pre, t), t).localCheckpoint(false)
-    val r3 = tm("filtered_candidates", cand.count())
-    val r4 = tm("verify", ppjoinVerified(docs, cand, t).count())
-    Seq(r1, r2, r3, r4)
-  }
-
   /** r15 verdict #4: the ppjoin-vs-banding price sheet. Both routes
     * verify on the SAME 3-gram hashed-shingle sets at the SAME
     * jaccard τ=0.5 ([[ppjoinVerified]] is the shared verify stage),

@@ -371,31 +371,6 @@ object GeoOps {
       .join(core.select(col("id").as("idb")), Seq("idb"))
   }
 
-  /** Stage-level timing for the dbscan pipeline (ScaleProbe
-    * `dbscan-stages` mode): where the 10× cost actually sits. */
-  private[graft] def dbscanStageProbe(spark: SparkSession, dir: String)
-      : Seq[(String, Double, Long)] = {
-    def t(label: String, f: => Long): (String, Double, Long) = {
-      val t0 = System.nanoTime(); val n = f
-      (label, (System.nanoTime() - t0) / 1e9, n)
-    }
-    val r1 = t("eps_pairs", { val (_, p) = epsGraph(spark, dir); p.count() })
-    val (_, pairs) = epsGraph(spark, dir)
-    val minPts = 5L
-    val deg = pairs.groupBy(col("ida")).agg((count(lit(1)) + lit(1L)).as("deg"))
-    val core = deg.filter(col("deg") >= minPts).select(col("ida").as("id"))
-    // lazy checkpoint: the timed count below materializes `ce`, and r3
-    // REUSES it (r12 advice — the old probe rebuilt and re-counted an
-    // identical core-edge join untimed, doubling probe wall time)
-    val ce = pairs.join(core.select(col("id").as("ida")), Seq("ida"))
-      .join(core.select(col("id").as("idb")), Seq("idb")).localCheckpoint(false)
-    val r2 = t("core_edges", ce.count())
-    val r3 = t("cc_on_core_edges",
-      graft.api.Graft.connectedComponents(ce, "ida", "idb").count())
-    val r4 = t("dbscan_full", dbscan(spark, dir).count())
-    Seq(r1, r2, r3, r4)
-  }
-
   def dbscan(spark: SparkSession, dir: String): DataFrame = {
     val minPts = 5L // closed-neighborhood minimum, self included
     val (pts, pairs) = epsGraph(spark, dir)

@@ -743,7 +743,7 @@ object Joins {
     * covers the cases they don't — a pre-filtered dimension the
     * stats can't see through, or a reused filter across stages. */
   def bloomPrunedJoin(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.SketchFunctions.register(spark)
+    graft.functions.VectorFunctions.register(spark)
     val dim = Tables.orders(spark, dir)
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"))

@@ -10,20 +10,7 @@ import org.apache.spark.sql.SparkSessionExtensions
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(VectorFunctions.dotInfo)
-    ext.injectFunction(VectorFunctions.normInfo)
-    ext.injectFunction(VectorFunctions.lshInfo)
-    ext.injectFunction(VectorFunctions.simhashInfo)
-    ext.injectFunction(VectorFunctions.minhashInfo)
-    ext.injectFunction(VectorFunctions.argmaxInfo)
-    ext.injectFunction(VectorFunctions.pqEncodeInfo)
-    ext.injectFunction(VectorFunctions.pqDecodeInfo)
-    ext.injectFunction(VectorFunctions.cellResidualInfo)
-    ext.injectFunction(VectorFunctions.cellAddInfo)
-    ext.injectFunction(VectorFunctions.sortedInterInfo)
-    ext.injectFunction(graft.functions.SketchFunctions.mightContainInfo)
-    ext.injectFunction(graft.functions.BpeFunctions.bpeCountInfo)
-    ext.injectFunction(graft.functions.BpeFunctions.bpePiecesInfo)
+    VectorFunctions.all.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => NativeVectorRewrite)
     ext.injectPlannerStrategy(_ => AsofJoinStrategy)
   }
