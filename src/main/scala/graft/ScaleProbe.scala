@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
   * Usage:
   *   runMain graft.ScaleProbe                 (all benched queries + sections; writes docs/SCALE.md)
   *   runMain graft.ScaleProbe q1 q2 …         (main table for the named queries only; prints)
-  *   runMain graft.ScaleProbe <mode>          (cc-reconcile, band-tuning, stream-state,
-  *                                             ann-headtohead, ppjoin-vs-band, cc-invariant)
+  *   runMain graft.ScaleProbe <mode>          (cc-reconcile, band-tuning, ann-headtohead,
+  *                                             ppjoin-vs-band, cc-invariant)
   */
 object ScaleProbe {
 
@@ -338,11 +338,6 @@ object ScaleProbe {
       sb.append("fraction-of-the-shuffle trade this table exists to price.\n")
       java.nio.file.Files.writeString(java.nio.file.Paths.get("docs/TUNING.md"), sb.toString)
       println(sb.toString)
-      spark.stop(); return
-    }
-    if (args.headOption.contains("stream-state")) {
-      graft.streaming.StreamStateProbe.run(spark)
-        .foreach(l => println(s"[stream-state] $l"))
       spark.stop(); return
     }
     if (args.headOption.contains("ann-headtohead")) {

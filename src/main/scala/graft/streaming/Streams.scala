@@ -29,10 +29,12 @@ object Streams {
     * `available_memory = "256M"`) mapped onto Structured Streaming's
     * rate controls:
     *
-    *  - `maxFilesPerTrigger` bounds how many arrived objects one
-    *    micro-batch ingests — the concurrency cap that
-    *    `max_instance_count ≤ 3` imposes on the event-driven function
-    *    (at most 3 objects in flight). Default 3, matching main.tf:53.
+    *  - `maxFilesPerTrigger` bounds how many notification files one
+    *    micro-batch ingests, and [[xlsxEtl]] loads a batch's objects
+    *    on at most that many threads at once — the concurrency cap
+    *    that `max_instance_count ≤ 3` imposes on the event-driven
+    *    function (at most 3 objects in flight). Default 3, matching
+    *    main.tf:53.
     *  - `processingInterval` is the redelivery/pacing analog of the
     *    540 s function timeout: a function that must finish one object
     *    inside 540 s becomes a micro-batch cadence no slower than that
@@ -101,10 +103,19 @@ object Streams {
     *     job keyed by object) provides.
     *
     * Scale shape: the per-batch collect is of object NAMES only —
-    * bounded by `maxFilesPerTrigger` × notifications-per-file (the
-    * reference's one-invocation-per-event model, main.tf's
-    * max_instance_count); the workbook reads and warehouse writes are
-    * distributed jobs. */
+    * bounded by `maxFilesPerTrigger` × notifications-per-file — and
+    * runs no shuffle; the names are de-duplicated and sorted on the
+    * driver. Each accepted object's read → `transform` → warehouse
+    * write is its own distributed job, and up to
+    * `envelope.maxFilesPerTrigger` of them run at once (the
+    * reference's one instance per object, at most
+    * `max_instance_count` = 3 at a time), so a batch waits for its
+    * slowest object rather than for the sum. `transform` may
+    * therefore be called from several threads at once. If an object
+    * fails, the batch waits for its siblings and then fails with an
+    * error naming that object; the checkpoint replays the batch on
+    * restart and the per-object overwrite keeps the replay
+    * idempotent. */
   def xlsxEtl(spark: SparkSession, notifDir: String, landingRoot: String,
               warehouseDir: String, checkpoint: String,
               prefix: String = "minha-pasta/", suffix: String = ".xlsx",
@@ -116,7 +127,11 @@ object Streams {
       .filter(graft.api.Graft.objectNameAccept(col("name"), prefix, suffix))
     accepted.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val names = batch.select("name").distinct().collect().map(_.getString(0)).sorted
+        // a batch holds at most maxFilesPerTrigger notification files, so
+        // the names are collected as they are and de-duplicated on the
+        // driver, with no shuffle; a duplicate would put two concurrent
+        // loads on one object= directory
+        val names = batch.select("name").collect().map(_.getString(0)).distinct.sorted
         // a notification name is UNTRUSTED input joined onto a local
         // path: reject anything that could escape landingRoot (an
         // object store's flat namespace has no "..", so a traversal
@@ -126,7 +141,7 @@ object Streams {
         if (bad.nonEmpty)
           org.slf4j.LoggerFactory.getLogger("graft.streaming.Streams")
             .warn(s"xlsxEtl: skipping ${bad.length} malformed object name(s): ${bad.mkString(", ")}")
-        ok.foreach { n =>
+        loadEach(ok.toSeq, envelope.maxFilesPerTrigger) { n =>
           val workbook = spark.read.format("xlsx")
             .option("inferSchema", true).load(s"$landingRoot/$n")
           // dir name = readable sanitized prefix + md5 of the RAW name:
@@ -146,6 +161,57 @@ object Streams {
       .trigger(envelope.trigger)
       .start()
   }
+
+  /** Runs `load` once per name on a pool of `min(names, cap)` threads
+    * named `graft-xlsx-etl-<i>`. The pool is built on the calling
+    * thread, so every worker inherits its Spark local properties (job
+    * group and description, streaming ids, `graft.scope`, a caller's
+    * own tags). Every load is waited for before this returns or
+    * throws, so no sibling's write lands after a failure is reported,
+    * and every worker has exited. A fatal error is rethrown as it is;
+    * otherwise the first failure in name order is rethrown naming its
+    * object, the others attached as suppressed. The wrapper is a
+    * `SparkException`, whose cause chain Structured Streaming still
+    * reads to tell a `stop()` from a failure. */
+  private def loadEach(names: Seq[String], cap: Int)(load: String => Unit): Unit =
+    if (names.nonEmpty) {
+      val workers = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(names.size, cap),
+        (r: Runnable) => {
+          val t = new Thread(r, s"graft-xlsx-etl-${workers.size + 1}")
+          t.setDaemon(true)
+          workers.add(t)
+          t
+        })
+      try {
+        import scala.jdk.CollectionConverters._
+        val tasks = names.map(n => (() => load(n)): java.util.concurrent.Callable[Unit])
+        // invokeAll returns once every task is done; if this thread is
+        // interrupted (a stop()), it cancels the rest and the joins in
+        // `finally` wait for the ones already running
+        val failures = names.zip(pool.invokeAll(tasks.asJava).asScala).flatMap { case (n, f) =>
+          try { f.get(); None }
+          catch {
+            case e: java.util.concurrent.ExecutionException if !scala.util.control.NonFatal(e.getCause) =>
+              throw e.getCause
+            case e: java.util.concurrent.ExecutionException =>
+              Some(new org.apache.spark.SparkException(
+                s"xlsxEtl: object '$n' failed to load: ${e.getCause.getMessage}", e.getCause))
+          }
+        }
+        failures.headOption.foreach { first =>
+          failures.tail.foreach(first.addSuppressed)
+          throw first
+        }
+      } finally {
+        pool.shutdownNow()
+        var interrupted = false
+        workers.forEach { t =>
+          while (t.isAlive) try t.join() catch { case _: InterruptedException => interrupted = true }
+        }
+        if (interrupted) Thread.currentThread().interrupt()
+      }
+    }
 
   /** Streaming corpus ingestion — the §2.10 corpus-prep operators
     * composed onto an unbounded document stream. Every per-document

@@ -260,6 +260,200 @@ class StreamsSpec extends SparkSpec {
     assert(spark.read.parquet(wh).select("id").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
   }
 
+  /** Fresh (notifications, landing root, warehouse, checkpoint) dirs for
+    * one xlsxEtl run; the landing root has a `minha-pasta/` folder. */
+  private def xlsxDirs(tag: String): (String, String, String, String) = {
+    def tmp(kind: String) = java.nio.file.Files.createTempDirectory(s"graft_${tag}_$kind").toString
+    val dirs = (tmp("notif"), tmp("land"), tmp("wh"), tmp("ckpt"))
+    new java.io.File(s"${dirs._2}/minha-pasta").mkdirs()
+    dirs
+  }
+
+  /** One notification file per element of `drops`, each holding those
+    * object names. */
+  private def notifyObjects(notif: String, drops: Seq[String]*): Unit = {
+    import spark.implicits._
+    for ((names, i) <- drops.zipWithIndex)
+      names.map(n => ("tma-0", n, 1L)).toDF("bucket", "name", "size_bytes")
+        .coalesce(1).write.parquet(s"$notif/drop$i")
+  }
+
+  /** The `object=` directories of a warehouse, by name. */
+  private def objectDirs(wh: String): Seq[java.io.File] =
+    Option(new java.io.File(wh).listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith("object=")).sortBy(_.getName)
+
+  private def whRows(wh: String): Seq[(Long, Long, String)] =
+    spark.read.parquet(wh).collect()
+      .map(r => (r.getAs[Long]("id"), r.getAs[Long]("qty"), r.getAs[String]("_source_object")))
+      .toSeq.sorted
+
+  test("xlsx ETL: a corrupt object fails its 3-object batch by name; siblings finish first; a fixed replay equals a clean run") {
+    import graft.sources.xlsx.XlsxParser
+    val (notif, landing, wh, ckpt) = xlsxDirs("fail")
+    // siblings large enough to be mid-write when the truncated object
+    // fails at planning
+    for (o <- Seq("a", "c"))
+      XlsxParser.write(s"$landing/minha-pasta/$o.xlsx", Seq("id", "qty"),
+        (1 to 5000).map(i => Seq(i.toString, (i * 2).toString)))
+    val bad = java.nio.file.Paths.get(s"$landing/minha-pasta/b.xlsx")
+    XlsxParser.write(bad.toString, Seq("id", "qty"), Seq(Seq("7", "70")))
+    val whole = java.nio.file.Files.readAllBytes(bad)
+    java.nio.file.Files.write(bad, whole.take(whole.length / 2)) // no zip central directory
+    notifyObjects(notif, Seq("minha-pasta/a.xlsx"), Seq("minha-pasta/b.xlsx"), Seq("minha-pasta/c.xlsx"))
+    val envelope = Streams.TriggerEnvelope(maxFilesPerTrigger = 3)
+
+    val q = Streams.xlsxEtl(spark, s"$notif/*", landing, wh, ckpt, envelope = envelope)
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination(120000))
+    def chain(t: Throwable): List[Throwable] = if (t == null) Nil else t :: chain(t.getCause)
+    assert(chain(err).exists(t => String.valueOf(t.getMessage).contains("object 'minha-pasta/b.xlsx'")),
+      chain(err).map(_.getMessage).mkString("\n"))
+    // every sibling's directory is committed or absent when the failure
+    // surfaces, and nothing is written after it
+    def listing(): Map[String, Long] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(new java.io.File(wh)).map(f => f.getPath -> f.length).toMap
+    }
+    val atFailure = listing()
+    for (o <- Seq("a", "c"))
+      objectDirs(wh).filter(_.getName.startsWith(s"object=minha-pasta__$o.xlsx-")).foreach { d =>
+        assert(new java.io.File(d, "_SUCCESS").exists && !new java.io.File(d, "_temporary").exists,
+          s"${d.getName} is half-written: ${d.list().mkString(", ")}")
+      }
+    Thread.sleep(1000)
+    assert(listing() === atFailure)
+
+    // fix the object and restart on the same checkpoint: the failed batch
+    // replays and must give what a clean run on a new checkpoint gives
+    XlsxParser.write(bad.toString, Seq("id", "qty"), Seq(Seq("7", "70")))
+    Streams.xlsxEtl(spark, s"$notif/*", landing, wh, ckpt, envelope = envelope).awaitTermination(120000)
+    val (_, _, cleanWh, cleanCkpt) = xlsxDirs("fail_clean")
+    Streams.xlsxEtl(spark, s"$notif/*", landing, cleanWh, cleanCkpt, envelope = envelope).awaitTermination(120000)
+    val replayed = whRows(wh)
+    assert(replayed.size === 10001)
+    assert(replayed === whRows(cleanWh))
+    assert(objectDirs(wh).map(_.getName) === objectDirs(cleanWh).map(_.getName))
+  }
+
+  test("xlsx ETL: duplicate notifications for one object in one batch load it once") {
+    import graft.sources.xlsx.XlsxParser
+    val (notif, landing, wh, ckpt) = xlsxDirs("dup")
+    XlsxParser.write(s"$landing/minha-pasta/a.xlsx", Seq("id", "qty"), Seq(Seq("1", "10"), Seq("2", "20")))
+    XlsxParser.write(s"$landing/minha-pasta/b.xlsx", Seq("id", "qty"), Seq(Seq("3", "30")))
+    // duplicates both within one notification file and across two
+    notifyObjects(notif, Seq("minha-pasta/a.xlsx", "minha-pasta/a.xlsx"), Seq("minha-pasta/a.xlsx", "minha-pasta/b.xlsx"))
+    val q = Streams.xlsxEtl(spark, s"$notif/*", landing, wh, ckpt)
+    q.awaitTermination(120000)
+    assert(q.exception.isEmpty)
+    assert(q.recentProgress.filter(_.numInputRows > 0).map(_.numInputRows).toSeq === Seq(4L),
+      "all four notifications should arrive in one batch")
+    val dirs = objectDirs(wh).map(_.getName)
+    assert(dirs.size === 2 && dirs(0).startsWith("object=minha-pasta__a.xlsx-") &&
+      dirs(1).startsWith("object=minha-pasta__b.xlsx-"), dirs) // one directory per object …
+    assert(whRows(wh) === Seq((1L, 10L, "minha-pasta/a.xlsx"), (2L, 20L, "minha-pasta/a.xlsx"),
+      (3L, 30L, "minha-pasta/b.xlsx"))) // … and each row once
+  }
+
+  test("xlsx ETL: concurrent loads carry the caller's job properties, and no pool thread outlives the stream") {
+    import graft.sources.xlsx.XlsxParser
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val (notif, landing, wh, ckpt) = xlsxDirs("props")
+    for (o <- Seq("a", "b", "c"))
+      XlsxParser.write(s"$landing/minha-pasta/$o.xlsx", Seq("id", "qty"),
+        (1 to 500).map(i => Seq(i.toString, (i * 10).toString)))
+    notifyObjects(notif, Seq("minha-pasta/a.xlsx"), Seq("minha-pasta/b.xlsx"), Seq("minha-pasta/c.xlsx"))
+
+    val sc = spark.sparkContext
+    val key = graft.api.Graft.ScopeTag
+    val tag = s"xlsx-spec:${java.util.UUID.randomUUID()}"
+    val marker = s"$tag-marker"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.add(Option(js.properties).flatMap(p => Option(p.getProperty(key))).getOrElse("-"))
+    }
+    // (thread, tag) seen by each call of `transform`: it runs inside the load
+    val loads = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      val q = try Streams.xlsxEtl(spark, s"$notif/*", landing, wh, ckpt,
+        transform = df => { loads.add(Thread.currentThread().getName -> sc.getLocalProperty(key)); df },
+        envelope = Streams.TriggerEnvelope(maxFilesPerTrigger = 3))
+      finally sc.setLocalProperty(key, null)
+      q.awaitTermination(120000)
+      assert(q.exception.isEmpty)
+      assert(Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith("graft-xlsx-etl-")).isEmpty,
+        "a load thread is still alive after the stream ended")
+      sc.setLocalProperty(key, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      val during = jobs.asScala.takeWhile(_ != marker).toSeq
+      // one name collect plus at least one write job per object
+      assert(during.size >= 4, during)
+      assert(during.forall(_ == tag), during)
+      assert(loads.asScala.map(_._1).toSet ===
+        Set("graft-xlsx-etl-1", "graft-xlsx-etl-2", "graft-xlsx-etl-3"))
+      assert(loads.asScala.map(_._2).toSet === Set(tag))
+      assert(whRows(wh).map(_._3).distinct ===
+        Seq("minha-pasta/a.xlsx", "minha-pasta/b.xlsx", "minha-pasta/c.xlsx"))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("xlsx ETL: stop() during concurrent loads ends the stream as stopped, with every load thread gone") {
+    import graft.sources.xlsx.XlsxParser
+    import scala.jdk.CollectionConverters._
+    val (notif, landing, wh, ckpt) = xlsxDirs("stop")
+    for (o <- Seq("a", "b", "c"))
+      XlsxParser.write(s"$landing/minha-pasta/$o.xlsx", Seq("id", "qty"), Seq(Seq("1", "10")))
+    notifyObjects(notif, Seq("minha-pasta/a.xlsx"), Seq("minha-pasta/b.xlsx"), Seq("minha-pasta/c.xlsx"))
+    // every load blocks until interrupted, so stop() lands mid-batch
+    val started = new java.util.concurrent.CountDownLatch(3)
+    val never = new java.util.concurrent.CountDownLatch(1)
+    val q = Streams.xlsxEtl(spark, s"$notif/*", landing, wh, ckpt,
+      transform = df => { started.countDown(); never.await(); df },
+      envelope = Streams.TriggerEnvelope(maxFilesPerTrigger = 3))
+    assert(started.await(60, java.util.concurrent.TimeUnit.SECONDS), "the three loads never started")
+    val stopper = new Thread(() => q.stop())
+    stopper.start()
+    stopper.join(60000)
+    assert(!stopper.isAlive, "stop() did not return")
+    assert(!q.isActive && q.exception.isEmpty, q.exception)
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(_.getName.startsWith("graft-xlsx-etl-")))
+    assert(objectDirs(wh).isEmpty)
+  }
+
+  test("xlsx ETL: a lone object loads on the pool too, and a fatal load error reaches the stream unwrapped") {
+    import graft.sources.xlsx.XlsxParser
+    import scala.jdk.CollectionConverters._
+    val (notif, landing, wh, ckpt) = xlsxDirs("lone")
+    XlsxParser.write(s"$landing/minha-pasta/a.xlsx", Seq("id", "qty"), Seq(Seq("1", "10")))
+    notifyObjects(notif, Seq("minha-pasta/a.xlsx"))
+    val threads = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val q = Streams.xlsxEtl(spark, s"$notif/*", landing, wh, ckpt,
+      transform = df => { threads.add(Thread.currentThread().getName); df })
+    q.awaitTermination(120000)
+    assert(q.exception.isEmpty)
+    assert(threads.asScala.toSeq === Seq("graft-xlsx-etl-1"))
+    assert(whRows(wh) === Seq((1L, 10L, "minha-pasta/a.xlsx")))
+
+    // a fatal error is not turned into an ordinary batch failure
+    val (notif2, landing2, wh2, ckpt2) = xlsxDirs("fatal")
+    for (o <- Seq("a", "b"))
+      XlsxParser.write(s"$landing2/minha-pasta/$o.xlsx", Seq("id", "qty"), Seq(Seq("1", "10")))
+    notifyObjects(notif2, Seq("minha-pasta/a.xlsx"), Seq("minha-pasta/b.xlsx"))
+    val fatal = new LinkageError("xlsx ETL spec: fatal load error")
+    val q2 = Streams.xlsxEtl(spark, s"$notif2/*", landing2, wh2, ckpt2,
+      transform = _ => throw fatal)
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q2.awaitTermination(120000))
+    assert(err.getCause eq fatal, err.getCause)
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(_.getName.startsWith("graft-xlsx-etl-")))
+    assert(objectDirs(wh2).isEmpty)
+  }
+
   test("streaming corpus ingestion: digest dedup + quality gate + BPE count on a stream") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
