@@ -28,60 +28,10 @@ import org.apache.spark.sql.functions._
   * Usage:
   *   runMain graft.ScaleProbe                 (all benched queries + sections; writes docs/SCALE.md)
   *   runMain graft.ScaleProbe q1 q2 …         (main table for the named queries only; prints)
-  *   runMain graft.ScaleProbe <mode>          (cc-reconcile, band-tuning, ann-headtohead,
+  *   runMain graft.ScaleProbe <mode>          (band-tuning, ann-headtohead,
   *                                             ppjoin-vs-band, cc-invariant)
   */
 object ScaleProbe {
-
-  /** r12 verdict task #2 — the CONTROLLED pre-collapse measurement that
-    * replaces three contradictory r11 artifacts: preCollapse on/off ×
-    * {sf0.1, ~sf1} × interleaved min-of-3, on the EDGE LISTS of the
-    * three CC consumers the driver bench flagged (dedup near-dup
-    * pairs, er-resolve fuzzy name pairs, plus the pathological chain).
-    * Edges are materialized (localCheckpoint) BEFORE timing so the
-    * comparison isolates the CC stage — upstream pair-generation cost
-    * is identical in both settings by construction (and since r12 the
-    * engine itself checkpoints the symmetric edge list once, so the
-    * end-to-end delta equals this CC-stage delta). */
-  private def ccReconcile(spark: SparkSession, sf01: String, big: String): Unit = {
-    def matEdges(df: DataFrame, a: String, b: String): DataFrame = {
-      val m = df.select(col(a), col(b)).localCheckpoint()
-      m.count(); m
-    }
-    def timeCc(edges: DataFrame, a: String, b: String, pre: Boolean): Double = {
-      val t0 = System.nanoTime()
-      graft.api.Graft.connectedComponents(edges, a, b, preCollapse = pre).count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val cases: Seq[(String, DataFrame, String, String)] = Seq(
-      ("dedup_pairs_sf0.1", matEdges(graft.api.Graft.nearDupPairs(
-        Tables.documents(spark, sf01), "text", "doc_id"), "id_a", "id_b"),
-        "id_a", "id_b"),
-      ("dedup_pairs_sf1", matEdges(graft.api.Graft.nearDupPairs(
-        Tables.documents(spark, big), "text", "doc_id"), "id_a", "id_b"),
-        "id_a", "id_b"),
-      ("er_name_pairs_sf0.1", matEdges(graft.operators.Joins
-        .fuzzyBlockedJoin(spark, sf01)
-        .select(col("name_a").as("a"), col("name_b").as("b")), "a", "b"), "a", "b"),
-      ("er_name_pairs_sf1", matEdges(graft.operators.Joins
-        .fuzzyBlockedJoin(spark, big)
-        .select(col("name_a").as("a"), col("name_b").as("b")), "a", "b"), "a", "b"),
-      ("chain_20k", matEdges(spark.range(0, 19999)
-        .select(col("id").as("a"), (col("id") + 1L).as("b")), "a", "b"), "a", "b"))
-    // warm both code paths untimed (codegen compilation per round)
-    timeCc(cases.last._2, "a", "b", pre = false)
-    timeCc(cases.last._2, "a", "b", pre = true)
-    println("| edge list | edges | plain min-of-3 s | precollapse min-of-3 s |")
-    println("|---|---|---|---|")
-    cases.foreach { case (name, edges, a, b) =>
-      val n = edges.count()
-      // interleaved: plain/pre alternate so host noise hits both arms
-      val (ps, qs) = (1 to 3).map { _ =>
-        (timeCc(edges, a, b, pre = false), timeCc(edges, a, b, pre = true))
-      }.unzip
-      println(f"| $name | $n | ${ps.min}%.2f | ${qs.min}%.2f |")
-    }
-  }
 
   /** FIXPOINT-INVARIANT GATE (r12 verdict #1): the DuckDB oracle runs
     * at sf0.01/sf0.1 and can never see an unconverged fixpoint at ~sf1
@@ -196,9 +146,6 @@ object ScaleProbe {
     }
 
     // focused modes (full SCALE.md regen is the no-arg default)
-    if (args.contains("cc-reconcile")) {
-      ccReconcile(spark, sf01, big); spark.stop(); return
-    }
     // ---- banding parameter tuning (r13 verdict #5): make (bands,
     // rows) a MEASURED decision. For each (b, r) config the probe
     // builds a generic banded-minhash candidate stage (band j, row i
@@ -486,9 +433,12 @@ object ScaleProbe {
           .filter(size(col("codes")) > 0).count()),
       // PageRank over the kNN graph — the iteration loop at a
       // DATA-SIZED edge list (the types-graph query proves parity;
-      // this row proves the loop's two-shuffles-per-round cost
-      // tracks |edges|). Edge build rides the probed knn machinery;
-      // 3 rounds, micro-integer scores, lineage truncated per round
+      // this row shows the loop's cost against |edges|). Edge build
+      // rides the probed knn machinery; 3 rounds, micro-integer
+      // scores. The kNN edge list measures 10,000 rows at sf0.1
+      // (2,000 vectors × k=5) and 100,000 at ~sf1, under
+      // GraphOps.foldRows, so the rounds fold into the count's one
+      // plan; a job per round measured slower at both sizes
       ("pagerank_knn_graph", () =>
         graft.operators.GraphOps.pagerank(
           graft.api.Graft.knnGraph(spark,
@@ -646,8 +596,7 @@ object ScaleProbe {
       // r11 task #4, reconciled r12 (shared edge checkpoint +
       // adaptive hooking): the star pre-collapse variant measured
       // against the plain fixpoint on the SAME verified-pair edge
-      // lists at both scales; the focused interleaved min-of-3
-      // version of this comparison is `ScaleProbe cc-reconcile`
+      // lists at both scales
       def ccOnPairs(dir: String, pre: Boolean): () => Long = () => {
         val pairs = graft.api.Graft.nearDupPairs(
           Tables.documents(spark, dir), "text", "doc_id")
@@ -820,9 +769,10 @@ object ScaleProbe {
     sb.append("consumers with differing join keys defeat ReusedExchange), which\n")
     sb.append("measured 0.82 -> 0.70 s sf0.1 and 0.85 -> 0.73 s ~sf1 (q-mode\n")
     sb.append("min-of-3, interleaved A/B).\n")
-    sb.append("\nr12 reconciliation (replaces the contradictory r11 numbers —\n")
-    sb.append("`ScaleProbe cc-reconcile` is the controlled interleaved min-of-3\n")
-    sb.append("on pre-materialized edge lists): the r11 disagreement traced to\n")
+    sb.append("\nr12 reconciliation (replaces the contradictory r11 numbers; a\n")
+    sb.append("controlled interleaved min-of-3 on pre-materialized edge lists,\n")
+    sb.append("generated at commit 9ba298e by a since-deleted ScaleProbe mode):\n")
+    sb.append("the r11 disagreement traced to\n")
     sb.append("the pre-collapse branch re-evaluating the upstream pair pipeline\n")
     sb.append("twice (fixed: the symmetric edge list is checkpointed once, before\n")
     sb.append("any branch). With the fix, pre-collapse wins at both scales on the\n")

@@ -438,13 +438,12 @@ object Graft {
     // (ReuseExchange only dedups subtrees rooted at an Exchange, and
     // the verify tail is a filter). The explode streams the pipeline
     // ONCE and emits both directions from the map stage (r15).
-    val symRaw = edges
+    val (symRaw, nSym) = materialize(edges
       .select(explode(array(
         struct(col(srcCol).as("__src"), col(dstCol).as("__dst")),
         struct(col(dstCol).as("__src"), col(srcCol).as("__dst")))).as("__e"))
       .select(col("__e.__src").as("__src"), col("__e.__dst").as("__dst"))
-      .repartition(col("__src"))
-      .localCheckpoint()
+      .repartition(col("__src")))
     // RECURSIVE STAR PRE-COLLAPSE with a shrink gate (r12, replacing
     // the r10/r11 single-level version): one closed-neighborhood min
     // pass labels every node min(id, neighbors), then the SAME
@@ -459,23 +458,19 @@ object Graft {
     // (geo_dbscan measured 5.0× at 10× data in r11). Recursion makes
     // total contraction work GEOMETRIC (E·(1+1/s+1/s²+…) for shrink
     // factor s) while the fixpoint runs only on the tiny residue.
-    // Gates, each on the checkpointed edge count (a ~free scalar):
+    // Gates, each on the edge count measured by the checkpoint's own job:
     //  - floor 1024 sym edges: below it the fixpoint is already cheap
     //    and a contraction level is pure job overhead (the 80-edge
     //    er-resolve graph ties instead of paying);
     //  - shrink < 0.7×parent: a level that stalls (bipartite-ish
     //    residue) stops the recursion instead of paying dead levels;
     //  - maxContractLevels = 1: deeper recursion was MEASURED
-    //    (cc-reconcile, r12) to never win — clique graphs collapse in
+    //    (r12, docs/SCALE.md) to never win — clique graphs collapse in
     //    one level and the zigzag residues stall immediately (level 2
     //    shrank 10740 → 10624 on the dbscan core graph), so extra
     //    levels only paid job overhead; the adaptive hook below is
     //    what rescues crawl-prone residues, not more contraction.
     val maxContractLevels = 1
-    // counted unconditionally (r16): the scalar now ALSO gates the
-    // tiny-fixpoint mode below, and it is a shuffle-free scan of the
-    // just-checkpointed blocks at any scale
-    val nSym = symRaw.count()
     val contract = preCollapse && level < maxContractLevels && nSym > 1024 &&
       (parentSymEdges < 0L || nSym * 10L < parentSymEdges * 7L)
     // MEASURED-TINY MODE (r16): with AQE on, every Exchange of every
@@ -968,11 +963,8 @@ object Graft {
     * e.g. ccImpl's recursion), the body runs on `spark` itself. */
   private[graft] def scoped(spark: SparkSession, tag: String,
                             settings: Map[String, String])
-                           (body: SparkSession => DataFrame): DataFrame = {
-    val sc = spark.sparkContext
-    val priorTag = sc.getLocalProperty(ScopeTag)
-    sc.setLocalProperty(ScopeTag, tag)
-    try {
+                           (body: SparkSession => DataFrame): DataFrame =
+    tagged(spark, tag) {
       val held = Scope.held.get
       if (settings.isEmpty || (held != null && (held._2 eq spark))) body(spark)
       else {
@@ -985,8 +977,35 @@ object Graft {
         try on(spark, body(s))
         finally settings.keys.foreach(k => base.get(k).fold(s.conf.unset(k))(s.conf.set(k, _)))
       }
-    } finally sc.setLocalProperty(ScopeTag, priorTag)
+    }
+
+  /** `body` with this thread's [[ScopeTag]] job property set to `tag`;
+    * the caller's tag is back once it returns or throws. */
+  private[graft] def tagged[A](spark: SparkSession, tag: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    val priorTag = sc.getLocalProperty(ScopeTag)
+    sc.setLocalProperty(ScopeTag, tag)
+    try body finally sc.setLocalProperty(ScopeTag, priorTag)
   }
+
+  /** `df` checkpointed, and its row count, from ONE job: an observed
+    * row count rides the eager checkpoint's own job and is read from
+    * its executed plan, where `localCheckpoint()` plus `count()` runs
+    * the checkpoint job and then a count over the checkpoint (two more
+    * jobs under AQE). Shuffle stages upstream of the checkpoint still
+    * run as their own jobs. A lazy checkpoint filled by a count of
+    * its RDD also runs one job, but measured slower in fresh JVMs:
+    * `graph_ppr` at sf0.1 on 4 cores (`OptBench time`, three
+    * alternating pairs) took 1.07–1.35 s median that way and
+    * 0.95–1.10 s this way. */
+  private[graft] def materialize(df: DataFrame): (DataFrame, Long) = {
+    // a metric name must be unique within a plan
+    val name = s"graft_rows_${observations.incrementAndGet()}"
+    val observed = df.observe(name, count(lit(1)))
+    val cp = observed.localCheckpoint()
+    (cp, observed.queryExecution.observedMetrics(name).getLong(0))
+  }
+  private val observations = new java.util.concurrent.atomic.AtomicLong
 
   /** The thread's scope session and the snapshot (caller, its conf,
     * its planner extensions) it was cloned from. Reused while the

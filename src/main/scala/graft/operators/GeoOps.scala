@@ -309,9 +309,10 @@ object GeoOps {
   /** The √n-scaled deterministic point cloud + its eps-proximity
     * pairs (exact integer centiunit distances, eps-grid equi join) —
     * shared by [[dbscan]] and [[khopReach]]. The returned pairs are
-    * localCheckpoint-ed: both consumers reuse them several times and
-    * must not re-run the 9× grid join per reference. */
-  private def epsGraph(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    * checkpointed: both consumers reuse them several times and must
+    * not re-run the 9× grid join per reference. The pair count comes
+    * from the checkpoint's own job (size gates read it for free). */
+  private def epsGraph(spark: SparkSession, dir: String): (DataFrame, DataFrame, Long) = {
     val epsC = 100L // eps in centiunits (1.0 unit)
     val m = Tables.customer(spark, dir)
       .agg(floor(sqrt(count(lit(1)).cast("double"))).cast("long").as("m"))
@@ -327,14 +328,14 @@ object GeoOps {
       .withColumn("dy", explode(array((-1 to 1).map(lit(_)): _*)))
       .select(col("id").as("ida"), col("xc").as("xa"), col("yc").as("ya"),
         (col("cx") + col("dx")).as("cx"), (col("cy") + col("dy")).as("cy"))
-    val pairs = probe.join(pts.select(col("id").as("idb"), col("xc").as("xb"),
-        col("yc").as("yb"), col("cx"), col("cy")), Seq("cx", "cy"))
-      .filter(col("ida") =!= col("idb"))
-      .filter((col("xa") - col("xb")) * (col("xa") - col("xb")) +
-        (col("ya") - col("yb")) * (col("ya") - col("yb")) <= lit(epsC * epsC))
-      .select(col("ida"), col("idb"))
-      .localCheckpoint()
-    (pts, pairs)
+    val (pairs, nPairs) = graft.api.Graft.materialize(
+      probe.join(pts.select(col("id").as("idb"), col("xc").as("xb"),
+          col("yc").as("yb"), col("cx"), col("cy")), Seq("cx", "cy"))
+        .filter(col("ida") =!= col("idb"))
+        .filter((col("xa") - col("xb")) * (col("xa") - col("xb")) +
+          (col("ya") - col("yb")) * (col("ya") - col("yb")) <= lit(epsC * epsC))
+        .select(col("ida"), col("idb")))
+    (pts, pairs, nPairs)
   }
 
   /** The shared SQL prefix replaying [[epsGraph]] — MATERIALIZED, or
@@ -364,7 +365,7 @@ object GeoOps {
     * verify the PRODUCTION edge pipeline, not a probe-local copy. */
   private[graft] def dbscanCoreEdges(spark: SparkSession, dir: String): DataFrame = {
     val minPts = 5L
-    val (_, pairs) = epsGraph(spark, dir)
+    val (_, pairs, _) = epsGraph(spark, dir)
     val deg = pairs.groupBy(col("ida")).agg((count(lit(1)) + lit(1L)).as("deg"))
     val core = deg.filter(col("deg") >= minPts).select(col("ida").as("id"))
     pairs.join(core.select(col("id").as("ida")), Seq("ida"))
@@ -373,10 +374,8 @@ object GeoOps {
 
   def dbscan(spark: SparkSession, dir: String): DataFrame = {
     val minPts = 5L // closed-neighborhood minimum, self included
-    val (pts, pairs) = epsGraph(spark, dir)
-    // shuffle-free scan of the just-checkpointed pair blocks; gates
-    // the measured-tiny tail materialization below (r16)
-    val nPairs = pairs.count()
+    // nPairs gates the measured-tiny tail materialization below (r16)
+    val (pts, pairs, nPairs) = epsGraph(spark, dir)
     val deg = pairs.groupBy(col("ida")).agg((count(lit(1)) + lit(1L)).as("deg"))
     val core = deg.filter(col("deg") >= minPts).select(col("ida").as("id"))
     val coreEdges = pairs
@@ -477,7 +476,7 @@ object GeoOps {
     * argument as [[dbscan]]; the oracle's recursive walk is
     * hop-bounded (≤ 3) rather than closure-bounded. */
   def khopReach(spark: SparkSession, dir: String): DataFrame = {
-    val (pts, pairs) = epsGraph(spark, dir)
+    val (pts, pairs, _) = epsGraph(spark, dir)
     val edges = pairs.select(col("ida").as("node"), col("idb"))
     val seeds = pts.filter(col("id") % 100 === 0)
       .select(col("id").as("seed"))
@@ -546,15 +545,13 @@ object GeoOps {
     * otherwise re-run the upstream grid join); seeds bound the work,
     * the percolation argument bounds the frontier. */
   def betweenness(spark: SparkSession, dir: String): DataFrame = {
-    val (pts, pairs) = epsGraph(spark, dir)
+    val (pts, pairs, nPairs) = epsGraph(spark, dir)
     val edges = pairs.select(col("ida").as("u"), col("idb").as("w"))
     val seeds = pts.filter(col("id") % 100 === 0).select(col("id").as("seed"))
     // measured-tiny construction (r16): the 6 frontier checkpoints of
     // brandesSeeded ran as 53 driver jobs of 1-2 tasks × 10-70 ms
-    // under AQE — fixed overhead on seed-bounded frontiers. The count
-    // is a shuffle-free scan of the just-checkpointed pair blocks and
-    // gates the mode off at real scale (see Graft.tiny).
-    val nPairs = pairs.count()
+    // under AQE — fixed overhead on seed-bounded frontiers. The pair
+    // count gates the mode off at real scale (see Graft.tiny).
     graft.api.Graft.scoped(spark, s"betweenness:$nPairs",
         graft.api.Graft.tiny(spark, nPairs)) { s =>
       brandesSeeded(graft.api.Graft.on(s, edges), graft.api.Graft.on(s, seeds))
@@ -675,7 +672,7 @@ object GeoOps {
     * Scale: 3 key-partitioned joins in one declarative plan; seeds
     * bound the rows, the percolation argument bounds the frontier. */
   def closeness(spark: SparkSession, dir: String): DataFrame = {
-    val (pts, pairs) = epsGraph(spark, dir)
+    val (pts, pairs, _) = epsGraph(spark, dir)
     val edges = pairs.select(col("ida").as("node"), col("idb"))
     val seeds = pts.filter(col("id") % 100 === 0)
       .select(col("id").as("seed"))
@@ -812,7 +809,7 @@ object GeoOps {
     * integers (10·N(h) vs 9·N(4)), no division. Scale: 4
     * key-partitioned joins; frontier mass = sources × ball size. */
   def effDiameter(spark: SparkSession, dir: String): DataFrame = {
-    val (pts, pairs) = epsGraph(spark, dir)
+    val (pts, pairs, _) = epsGraph(spark, dir)
     val edges = pairs.select(col("ida").as("node"), col("idb"))
     val f0 = pts.filter(col("id") % 100 === 0)
       .select(col("id").as("seed"), col("id").as("node"))

@@ -1,6 +1,9 @@
 package graft.operators
 
+import scala.util.DynamicVariable
+
 import graft.Tables
+import graft.api.Graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -25,6 +28,125 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
+  /** Measured edge rows at or below which [[pagerank]],
+    * [[personalizedPagerank]] and [[hits]] fold their rounds into the
+    * consumer's one plan; above it every round is materialized. The
+    * bound is the largest edge list timed both ways: 3 pagerank rounds
+    * on 4 cores folded faster at every size tried, from kNN graphs of
+    * 10,000 and 100,000 edges (−7%, −14%) to random graphs of 1M, 4M
+    * and 8M edges (−39%, −16%, −31%; docs/SCALE.md). Above it the
+    * loops keep a job per round, untimed. A spec rebinds it to force
+    * a side. */
+  private[graft] val foldRows = new DynamicVariable[Long](1L << 23)
+
+  /** [[Graft.materialize]] with the jobs tagged `iter:<op> round=<r>`,
+    * plus `rows=<n>` once the loop has measured its input. */
+  private def iterRound(op: String, round: Int, rows: Option[Long],
+                        df: DataFrame): (DataFrame, Long) =
+    Graft.tagged(df.sparkSession,
+        s"iter:$op round=$round" + rows.fold("")(n => s" rows=$n"))(Graft.materialize(df))
+
+  /** The rank loops' round policy for an edge list that measured
+    * `rows`: at or below [[foldRows]] a round stays folded into the
+    * consumer's plan, above it round r is materialized. */
+  private def roundKeeper(op: String, rows: Long): (Int, DataFrame) => DataFrame =
+    if (rows <= foldRows.value) (_, df) => df
+    else (r, df) => iterRound(op, r, Some(rows), df)._1
+
+  /** Generic damped PageRank over ANY weighted edge DataFrame
+    * (columns src, dst, w) — the public iteration loop. Scores are
+    * integer micro-units between rounds (see [[pagerankTypes]] for
+    * the parity argument). The edge list is checkpointed and measured
+    * in one job. A graph that measures at most [[foldRows]] edges
+    * (the |types|² transition graph, the kNN graphs) folds every round
+    * into the consumer's single job: per-round jobs cost more than
+    * they save (r15: 2.6 s of construction for a 25-row graph; a job
+    * per round measured slower up to 8M edges). A larger one
+    * materializes each round, so round r+1 plans against a leaf
+    * instead of re-deriving rounds 1..r (the
+    * CC-fixpoint lesson; a 100 TB deployment points `setCheckpointDir`
+    * at durable storage and uses `checkpoint()` — same structure,
+    * executor-loss safe). On a huge edge list every round is one join
+    * keyed on src + one agg keyed on dst — two shuffles per iteration,
+    * the canonical distributed message-passing cost. */
+  def pagerank(edges: DataFrame, iterations: Int = 3, damping: Double = 0.85): DataFrame =
+    rank("pagerank", edges, None, iterations, damping)
+
+  /** The loop [[pagerank]] (`seed` None: uniform teleport over the n
+    * nodes) and [[personalizedPagerank]] (teleport mass on the seed)
+    * share; only the seed vector and the teleport term differ. */
+  private def rank(op: String, edges: DataFrame, seed: Option[String],
+                   iterations: Int, damping: Double): DataFrame = {
+    require(iterations >= 1 && iterations <= 50, s"$op: iterations $iterations")
+    // parity-by-construction: damping is quantized to an integer
+    // micro-unit ONCE, and both the teleport term and the damping
+    // factor derive from it — (1e6 - d)/n and d/1e6 are the exact
+    // double ops the oracle replays with the same integer, whereas
+    // double(1 - 0.85) differs from double(0.15) by 1 ulp and would
+    // leave chained-round() agreement to luck near .5 boundaries
+    val dMicro = math.round(damping * 1e6)
+    // the caller's edge extraction runs exactly ONCE: linked, nodes and
+    // n all branch from it (for the transition graph: a per-user window
+    // over all events — unchecked, it ran 3x per call, r15 measured)
+    val (e, rows) = iterRound(op, 0, None, edges)
+    val keep = roundKeeper(op, rows)
+    val outdeg = e.groupBy(col("src")).agg(sum(col("w")).as("outdeg"))
+    val linked = keep(0, e.join(outdeg, "src"))
+    val nodes0 = e.select(col("src").as("node")).union(e.select(col("dst"))).distinct()
+    // the uniform teleport needs n, so its nodes are always measured;
+    // a seeded run needs no n and keeps its nodes like a round
+    lazy val measured = iterRound(op, 0, Some(rows), nodes0)
+    val nodes = if (seed.isEmpty) measured._1 else keep(0, nodes0)
+    lazy val n = measured._2
+    val onSeed = seed.map(col("node") === _)
+    var scores = nodes.withColumn("score_micro",
+      onSeed.fold(lit(math.round(1e6 / n)))(when(_, lit(1000000L)).otherwise(lit(0L))))
+    // uniform: one rounding of teleport/n + damped sum; seeded: the
+    // integer teleport (exact, |seeds| = 1) plus the rounded damped sum
+    def update(in: Column): Column = onSeed match {
+      case None =>
+        round(lit((1e6.toLong - dMicro).toDouble / n) + lit(dMicro.toDouble / 1e6) * in)
+          .cast("long")
+      case Some(isSeed) =>
+        when(isSeed, lit(1000000L - dMicro)).otherwise(lit(0L)) +
+          round(lit(dMicro.toDouble / 1e6) * in).cast("long")
+    }
+    (1 to iterations).foreach { r =>
+      val contrib = linked
+        .join(scores.withColumnRenamed("node", "src"), "src")
+        .select(col("dst").as("node"),
+          // through double BEFORE the multiply: a long×long product
+          // silently wraps in Spark at large edge weights while
+          // DuckDB's BIGINT product overflow-checks — double×long is
+          // the same op (and the same value ≤ 2^53) on both engines
+          round(col("score_micro").cast("double") * col("w") / col("outdeg"))
+            .cast("long").as("c"))
+        .groupBy(col("node")).agg(sum(col("c")).as("in_micro"))
+      val next = nodes.join(contrib, Seq("node"), "left")
+        .select(col("node"), update(coalesce(col("in_micro"), lit(0L))).as("score_micro"))
+      scores = keep(r, next)
+    }
+    scores.orderBy(col("score_micro").desc, col("node"))
+  }
+
+  /** The event-type transition graph: per user, consecutive events
+    * (ts, event_id order) give a weighted edge prev_type → type. */
+  private def transitions(spark: SparkSession, dir: String): DataFrame = {
+    val order = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+    Tables.events(spark, dir)
+      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+      .withColumn("prev", lag(col("event_type"), 1).over(order))
+      .where(col("prev").isNotNull)
+      .groupBy(col("prev").as("src"), col("event_type").as("dst"))
+      .agg(count(lit(1)).as("w"))
+      // the aggregated edge list is |types|² (~25 rows): run the
+      // iterations single-partition so each round is one task, not
+      // 32 empty ones — the generic loops honor the caller's
+      // partitioning, and THIS caller knows its graph is tiny (the
+      // kNN-graph probe passes a data-sized, many-partition list)
+      .coalesce(1)
+  }
+
   /** PageRank (damping 0.85, 3 synchronous iterations from uniform)
     * over the event-type transition graph.
     *
@@ -37,89 +159,9 @@ object GraphOps {
     * integer inputs, so three chained iterations stay bit-equal
     * (free-floating iterated doubles would drift at the 4th decimal
     * by round two). */
-  /** Generic damped PageRank over ANY weighted edge DataFrame
-    * (columns src, dst, w) — the public iteration loop. Scores are
-    * integer micro-units between rounds (see [[pagerankTypes]] for
-    * the parity argument). `localCheckpoint` truncates the lineage
-    * each round (the CC-fixpoint lesson: without it, round r's plan
-    * embeds rounds 1..r−1 and the optimizer re-derives the whole
-    * chain; a 100 TB deployment points `setCheckpointDir` at durable
-    * storage and uses `checkpoint()` — same structure, executor-loss
-    * safe). On a huge edge list every round is one join keyed on
-    * src + one agg keyed on dst — two shuffles per iteration, the
-    * canonical distributed message-passing cost. */
-  def pagerank(edges: DataFrame, iterations: Int = 3, damping: Double = 0.85,
-               materializeRounds: Boolean = true): DataFrame = {
-    require(iterations >= 1 && iterations <= 50, s"pagerank: iterations $iterations")
-    // parity-by-construction: damping is quantized to an integer
-    // micro-unit ONCE, and both the teleport term and the damping
-    // factor derive from it — (1e6 - d)/n and d/1e6 are the exact
-    // double ops the oracle replays with the same integer, whereas
-    // double(1 - 0.85) differs from double(0.15) by 1 ulp and would
-    // leave chained-round() agreement to luck near .5 boundaries
-    val dMicro = math.round(damping * 1e6)
-    // materialize the caller's edge extraction exactly ONCE: linked,
-    // nodes and n all branch from it, and without this checkpoint each
-    // branch's own materializing job replayed the full upstream
-    // lineage (for the transition graph: a per-user window over all
-    // events — the extraction ran 3x per pagerank call, r15 measured)
-    val e = edges.localCheckpoint()
-    // pre-joined (src, dst, w/outdeg denominator) — computed once,
-    // reused every round
-    val outdeg = e.groupBy(col("src")).agg(sum(col("w")).as("outdeg"))
-    val linked0 = e.join(outdeg, "src")
-    val nodes0 = e.select(col("src").as("node"))
-      .union(e.select(col("dst"))).distinct()
-    // materializeRounds=true (default): every round lands as its own
-    // small job so round r+1 plans against a leaf — right for
-    // DATA-SIZED edge lists (the fixpoint lesson of
-    // Graft.connectedComponents). false: the whole iteration folds
-    // into the consumer's single job — right for AGGREGATE-BOUNDED
-    // graphs (the |types|² transition graph) where per-round
-    // job-submission latency dominates the microscopic per-round work
-    // (r15: graph_pagerank 2.6 s of construction for a 25-row graph).
-    val linked = if (materializeRounds) linked0.localCheckpoint() else linked0
-    val nodes = if (materializeRounds) nodes0.localCheckpoint() else nodes0
-    val n = nodes.count()
-    var scores = nodes.withColumn("score_micro", lit(math.round(1e6 / n)))
-    (1 to iterations).foreach { _ =>
-      val contrib = linked
-        .join(scores.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"),
-          // through double BEFORE the multiply: a long×long product
-          // silently wraps in Spark at large edge weights while
-          // DuckDB's BIGINT product overflow-checks — double×long is
-          // the same op (and the same value ≤ 2^53) on both engines
-          round(col("score_micro").cast("double") * col("w") / col("outdeg"))
-            .cast("long").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("in_micro"))
-      val next = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          round(lit((1e6.toLong - dMicro).toDouble / n) +
-              lit(dMicro.toDouble / 1e6) * coalesce(col("in_micro"), lit(0L)))
-            .cast("long").as("score_micro"))
-      scores = if (materializeRounds) next.localCheckpoint() else next
-    }
-    scores.orderBy(col("score_micro").desc, col("node"))
-  }
-
-  def pagerankTypes(spark: SparkSession, dir: String): DataFrame = {
-    val order = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val edges = Tables.events(spark, dir)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("prev", lag(col("event_type"), 1).over(order))
-      .where(col("prev").isNotNull)
-      .groupBy(col("prev").as("src"), col("event_type").as("dst"))
-      .agg(count(lit(1)).as("w"))
-      // the aggregated edge list is |types|² (~25 rows): run the
-      // iterations single-partition so each round is one task, not
-      // 32 empty ones — the generic loop honors the caller's
-      // partitioning, and THIS caller knows its graph is tiny (the
-      // kNN-graph probe passes a data-sized, many-partition list)
-      .coalesce(1)
-    pagerank(edges, iterations = 3, damping = 0.85, materializeRounds = false)
+  def pagerankTypes(spark: SparkSession, dir: String): DataFrame =
+    pagerank(transitions(spark, dir), iterations = 3, damping = 0.85)
       .select(col("node").as("event_type"), col("score_micro"))
-  }
 
   // one iteration as SQL, chained three times with the same constants
   // derived from the SAME micro-integer (850000) the Spark loop
@@ -173,51 +215,13 @@ object GraphOps {
     * variant, NO 1/N term exists, so disconnected regions correctly
     * decay to zero instead of receiving background mass. */
   def personalizedPagerank(edges: DataFrame, seed: String,
-      iterations: Int = 3, damping: Double = 0.85,
-      materializeRounds: Boolean = true): DataFrame = {
-    require(iterations >= 1 && iterations <= 50, s"ppr: iterations $iterations")
-    val dMicro = math.round(damping * 1e6)
-    // same materialization discipline as [[pagerank]]: extraction
-    // checkpointed once; per-round jobs only for data-sized graphs
-    val e = edges.localCheckpoint()
-    val outdeg = e.groupBy(col("src")).agg(sum(col("w")).as("outdeg"))
-    val linked0 = e.join(outdeg, "src")
-    val nodes0 = e.select(col("src").as("node"))
-      .union(e.select(col("dst"))).distinct()
-    val linked = if (materializeRounds) linked0.localCheckpoint() else linked0
-    val nodes = if (materializeRounds) nodes0.localCheckpoint() else nodes0
-    var scores = nodes.withColumn("score_micro",
-      when(col("node") === seed, lit(1000000L)).otherwise(lit(0L)))
-    (1 to iterations).foreach { _ =>
-      val contrib = linked
-        .join(scores.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"),
-          round(col("score_micro").cast("double") * col("w") / col("outdeg"))
-            .cast("long").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("in_micro"))
-      val next = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (when(col("node") === seed, lit(1000000L - dMicro)).otherwise(lit(0L)) +
-            round(lit(dMicro.toDouble / 1e6) * coalesce(col("in_micro"), lit(0L)))
-              .cast("long")).as("score_micro"))
-      scores = if (materializeRounds) next.localCheckpoint() else next
-    }
-    scores.orderBy(col("score_micro").desc, col("node"))
-  }
+      iterations: Int = 3, damping: Double = 0.85): DataFrame =
+    rank("ppr", edges, Some(seed), iterations, damping)
 
-  def pprTypes(spark: SparkSession, dir: String): DataFrame = {
-    val order = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val edges = Tables.events(spark, dir)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("prev", lag(col("event_type"), 1).over(order))
-      .where(col("prev").isNotNull)
-      .groupBy(col("prev").as("src"), col("event_type").as("dst"))
-      .agg(count(lit(1)).as("w"))
-      .coalesce(1)
-    personalizedPagerank(edges, seed = "purchase", iterations = 3, damping = 0.85,
-        materializeRounds = false)
+  def pprTypes(spark: SparkSession, dir: String): DataFrame =
+    personalizedPagerank(transitions(spark, dir), seed = "purchase", iterations = 3,
+        damping = 0.85)
       .select(col("node").as("event_type"), col("score_micro"))
-  }
 
   private def pprIterSql(prev: String, out: String): String =
     s"""$out AS (
@@ -252,6 +256,11 @@ object GraphOps {
        |SELECT node AS event_type, score_micro FROM s3
        |ORDER BY score_micro DESC, event_type""".stripMargin
 
+  /** The fuzzy-match name graph: [[Joins.fuzzyBlockedJoin]] pairs as
+    * undirected (a, b) edges, canonical a < b. */
+  private def nameEdges(spark: SparkSession, dir: String): DataFrame =
+    Joins.fuzzyBlockedJoin(spark, dir).select(col("name_a").as("a"), col("name_b").as("b"))
+
   /** Triangle count + global clustering coefficient over the
     * fuzzy-match name graph ([[Joins.fuzzyBlockedJoin]] pairs as
     * undirected edges, already canonical a<b). The standard two-join
@@ -272,8 +281,7 @@ object GraphOps {
     // different exchanges, so Catalyst cannot ReusedExchange them —
     // unchecked, the blocked levenshtein verify re-ran per consumer
     // (the r11→r12 graph_triangles drift the r12 verdict flagged)
-    val e = Joins.fuzzyBlockedJoin(spark, dir)
-      .select(col("name_a").as("a"), col("name_b").as("b")).localCheckpoint()
+    val e = nameEdges(spark, dir).localCheckpoint()
     val tri = e.as("e1")
       .join(e.as("e2"), col("e1.b") === col("e2.a"))
       .join(e.as("e3"), col("e3.a") === col("e1.a") && col("e3.b") === col("e2.b"))
@@ -326,8 +334,7 @@ object GraphOps {
     * list); census is one agg on an 11-value key. Exact integer
     * micro-units end-to-end. */
   def clusteringCoeff(spark: SparkSession, dir: String): DataFrame = {
-    val e = Joins.fuzzyBlockedJoin(spark, dir)
-      .select(col("name_a").as("a"), col("name_b").as("b")).localCheckpoint()
+    val e = nameEdges(spark, dir).localCheckpoint()
     val tri = e.as("e1")
       .join(e.as("e2"), col("e1.b") === col("e2.a"))
       .join(e.as("e3"), col("e3.a") === col("e1.a") && col("e3.b") === col("e2.b"))
@@ -399,8 +406,7 @@ object GraphOps {
     * siblings pay, a 3× projection of the TRIANGLE list, one equi
     * join on the canonical edge key, one compact-key agg. */
   def edgeSupport(spark: SparkSession, dir: String): DataFrame = {
-    val e = Joins.fuzzyBlockedJoin(spark, dir)
-      .select(col("name_a").as("a"), col("name_b").as("b")).localCheckpoint()
+    val e = nameEdges(spark, dir).localCheckpoint()
     val tri = e.as("e1")
       .join(e.as("e2"), col("e1.b") === col("e2.a"))
       .join(e.as("e3"), col("e3.a") === col("e1.a") && col("e3.b") === col("e2.b"))
@@ -513,38 +519,54 @@ object GraphOps {
     * identity), so the oracle unrolls the full cap as chained CTEs
     * and — given the engine's convergence assertion — both sides
     * equal the converged core. Each round is one degree count + two
-    * semi joins on node ids (equi, broadcastable survivor list);
-    * per-round localCheckpoint truncates lineage and makes the
-    * early-exit count() read from cached blocks. At 100 TB the cap
-    * bounds total work at rounds × O(E) — and 2-core peeling
+    * semi joins on node ids (equi, broadcastable survivor list), run
+    * by [[peel]]. At 100 TB the cap bounds total work at
+    * rounds × O(E) — and 2-core peeling
     * converges in few rounds on power-law graphs (chains are the
     * worst case, same as CC pointer jumping). */
   private val kCoreK = 2
   private val kCoreMaxRounds = 12
 
   def kCore(spark: SparkSession, dir: String): DataFrame = {
-    var e = Joins.fuzzyBlockedJoin(spark, dir)
-      .select(col("name_a").as("a"), col("name_b").as("b")).localCheckpoint()
-    var edges = e.count()
-    var converged = false
-    var round = 0
-    while (!converged && round < kCoreMaxRounds) {
-      val deg = e.select(col("a").as("node")).union(e.select(col("b")))
-        .groupBy(col("node")).agg(count(lit(1)).as("d"))
-      val keep = deg.filter(col("d") >= kCoreK).select(col("node"))
-      e = e.join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
-        .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
-        .localCheckpoint()
-      val left = e.count()
-      converged = left == edges
-      edges = left
-      round += 1
-    }
-    require(converged || edges == 0L,
-      s"kCore: no fixpoint within $kCoreMaxRounds rounds ($edges edges left)")
+    val e = kCorePeel(nameEdges(spark, dir), kCoreMaxRounds)
     e.select(col("a").as("node")).union(e.select(col("b")))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
       .orderBy(col("node"))
+  }
+
+  /** The converged [[kCoreK]]-core of an (a, b) edge list. */
+  private[graft] def kCorePeel(edges: DataFrame, maxRounds: Int): DataFrame =
+    peel("kCore", edges, maxRounds) { e =>
+      val keep = e.select(col("a").as("node")).union(e.select(col("b")))
+        .groupBy(col("node")).agg(count(lit(1)).as("d"))
+        .filter(col("d") >= kCoreK).select(col("node"))
+      e.join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
+        .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
+    }
+
+  /** Peels `edges` to a fixpoint, the loop [[kCore]] and [[kTruss]]
+    * share. Each round checkpoints `step` of the previous round's
+    * edges and counts them in one job (after the shuffle-stage jobs
+    * its plan needs); a round that keeps every row has converged, and
+    * an empty edge set is a fixpoint too. Round r's jobs are tagged
+    * `iter:<op> round=<r> rows=<its input rows>`; round 0 measures
+    * the input. Raises when `maxRounds` rounds end neither way — a
+    * partial peel is not the decomposition. */
+  private def peel(op: String, edges: DataFrame, maxRounds: Int)
+                  (step: DataFrame => DataFrame): DataFrame = {
+    var (e, rows) = iterRound(op, 0, None, edges)
+    var converged = false
+    var round = 0
+    while (!converged && rows > 0 && round < maxRounds) {
+      round += 1
+      val (next, left) = iterRound(op, round, Some(rows), step(e))
+      converged = left == rows
+      e = next
+      rows = left
+    }
+    require(converged || rows == 0L,
+      s"$op: no fixpoint within $maxRounds rounds ($rows edges left)")
+    e
   }
 
   // every per-round CTE is MATERIALIZED: with the default inlining,
@@ -598,8 +620,7 @@ object GraphOps {
     * Scale: each round is the oriented triangle join (the standard
     * O(E^1.5)-bounded truss round) on a DICTIONARY-bounded graph
     * (distinct part names); rounds × that cost is the whole budget,
-    * and the per-round localCheckpoint truncates lineage exactly as
-    * [[kCore]]'s rounds do. */
+    * and [[peel]] runs the rounds exactly as it does [[kCore]]'s. */
   private[graft] val trussK = 4
   private val trussMaxRounds = 8
 
@@ -616,26 +637,16 @@ object GraphOps {
 
   /** The converged truss EDGE set — shared by [[kTruss]] (census) and
     * the truss-⊆-core containment spec. */
-  private[graft] def kTrussEdges(spark: SparkSession, dir: String): DataFrame = {
-    var e = Joins.fuzzyBlockedJoin(spark, dir)
-      .select(col("name_a").as("a"), col("name_b").as("b")).localCheckpoint()
-    var edges = e.count()
-    var converged = false
-    var round = 0
-    while (!converged && round < trussMaxRounds && edges > 0) {
-      e = e.join(trussSupports(e), Seq("a", "b"))
+  private[graft] def kTrussEdges(spark: SparkSession, dir: String): DataFrame =
+    kTrussPeel(nameEdges(spark, dir), trussMaxRounds)
+
+  /** The converged [[trussK]]-truss of a canonical (a < b) edge list. */
+  private[graft] def kTrussPeel(edges: DataFrame, maxRounds: Int): DataFrame =
+    peel("kTruss", edges, maxRounds) { e =>
+      e.join(trussSupports(e), Seq("a", "b"))
         .filter(col("support") >= trussK - 2)
         .select(col("a"), col("b"))
-        .localCheckpoint()
-      val left = e.count()
-      converged = left == edges
-      edges = left
-      round += 1
     }
-    require(converged || edges == 0L,
-      s"kTruss: no fixpoint within $trussMaxRounds rounds ($edges edges left)")
-    e
-  }
 
   def kTruss(spark: SparkSession, dir: String): DataFrame = {
     val e = kTrussEdges(spark, dir)
@@ -694,9 +705,8 @@ object GraphOps {
     * replays the closure as a recursive CTE. Scale: the pair stage
     * sees the distinct-name dictionary, CC cost tracks edges. */
   def erResolve(spark: SparkSession, dir: String): DataFrame = {
-    val edges = Joins.fuzzyBlockedJoin(spark, dir)
-      .select(col("name_a").as("a"), col("name_b").as("b"))
-    val cc = graft.api.Graft.connectedComponents(edges, "a", "b")
+    val edges = nameEdges(spark, dir)
+    val cc = Graft.connectedComponents(edges, "a", "b")
     val counts = Tables.part(spark, dir)
       .groupBy(col("p_name").as("id")).agg(count(lit(1)).as("n_rows"))
     cc.join(counts, "id")
@@ -748,21 +758,8 @@ object GraphOps {
     * checkpoint discipline. */
   def labelPropagation(edges: DataFrame, iterations: Int = 2): DataFrame = {
     require(iterations >= 1 && iterations <= 50, s"labelPropagation: iterations $iterations")
-    // symmetrize once: labels flow both ways over an undirected edge.
-    // MAP-SIDE symmetrize (explode of the 2-struct array) instead of a
-    // self-union: the union's two branches each re-ran the caller's
-    // edge extraction inside this checkpoint's job (the levenshtein
-    // verify for the fuzzy-name graph — only subtrees at exchange
-    // roots get ReusedExchange'd, and the extraction's tail is a
-    // filter, not an exchange), while the explode streams the
-    // extraction ONCE and doubles rows in the map stage (r15).
-    val sym = edges
-      .select(explode(array(
-        struct(col("src").as("src"), col("dst").as("dst"), col("w").as("w")),
-        struct(col("dst").as("src"), col("src").as("dst"), col("w").as("w"))))
-        .as("__e"))
-      .select(col("__e.src").as("src"), col("__e.dst").as("dst"), col("__e.w").as("w"))
-      .localCheckpoint()
+    // labels flow both ways over an undirected edge
+    val sym = symmetrized(edges)
     val nodes = sym.select(col("src").as("node")).distinct().localCheckpoint()
     var labels = nodes.withColumn("lbl", col("node"))
     (1 to iterations).foreach { _ =>
@@ -783,6 +780,23 @@ object GraphOps {
     }
     labels
   }
+
+  /** An undirected (src, dst, w) edge list as both directions,
+    * checkpointed. MAP-SIDE symmetrize (explode of the 2-struct array)
+    * instead of a self-union: the union's two branches each re-ran the
+    * caller's edge extraction inside the checkpoint's job (the
+    * levenshtein verify for the fuzzy-name graph — only subtrees at
+    * exchange roots get ReusedExchange'd, and the extraction's tail is
+    * a filter, not an exchange), while the explode streams the
+    * extraction ONCE and doubles rows in the map stage (r15). */
+  private def symmetrized(edges: DataFrame): DataFrame =
+    edges
+      .select(explode(array(
+        struct(col("src").as("src"), col("dst").as("dst"), col("w").as("w")),
+        struct(col("dst").as("src"), col("src").as("dst"), col("w").as("w"))))
+        .as("__e"))
+      .select(col("__e.src").as("src"), col("__e.dst").as("dst"), col("__e.w").as("w"))
+      .localCheckpoint()
 
   /** Communities of the fuzzy-match name graph under 2 rounds of
     * synchronous LPA, edge weight = 4 − levenshtein (closer names
@@ -840,15 +854,7 @@ object GraphOps {
     * the frontier + one min-agg — the standard Pregel SSSP cost. */
   def shortestPaths(edges: DataFrame, source: String, iterations: Int = 4): DataFrame = {
     require(iterations >= 1 && iterations <= 50, s"shortestPaths: iterations $iterations")
-    // map-side symmetrize — same one-pass-extraction argument as
-    // [[labelPropagation]]
-    val sym = edges
-      .select(explode(array(
-        struct(col("src").as("src"), col("dst").as("dst"), col("w").as("w")),
-        struct(col("dst").as("src"), col("src").as("dst"), col("w").as("w"))))
-        .as("__e"))
-      .select(col("__e.src").as("src"), col("__e.dst").as("dst"), col("__e.w").as("w"))
-      .localCheckpoint()
+    val sym = symmetrized(edges)
     var dist = sym.select(col("src").as("node")).distinct()
       .where(col("node") === source)
       .withColumn("dist", lit(0L))
@@ -981,55 +987,41 @@ object GraphOps {
     * edge list each half-step is one join keyed on one endpoint + one
     * agg on the other, the canonical two-shuffle message-passing
     * round ([[pagerank]]'s cost model). */
-  def hits(edgesRaw: DataFrame, iterations: Int = 2,
-           materializeRounds: Boolean = true): DataFrame = {
-    // materialize the edge list ONCE: every half-step joins it, and
-    // without the checkpoint each of the 2·iterations joins replays
-    // the caller's full extraction lineage (for the transition graph:
-    // a per-user window over all events — measured 4x the op's cost).
-    // materializeRounds: see [[pagerank]] — per-half-step jobs for
-    // data-sized graphs, one folded plan for aggregate-bounded ones.
-    val edges = edgesRaw.localCheckpoint()
-    val nodes0 = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst"))).distinct()
-    val nodes = if (materializeRounds) nodes0.localCheckpoint() else nodes0
+  def hits(edgesRaw: DataFrame, iterations: Int = 2): DataFrame = {
+    // the edge list runs ONCE and is measured by the same job: every
+    // half-step joins it, and unchecked each of the 2·iterations joins
+    // replayed the caller's full extraction lineage (for the
+    // transition graph: a per-user window over all events — measured
+    // 4x the op's cost). Rounds fold or materialize as in [[pagerank]].
+    val (edges, rows) = iterRound("hits", 0, None, edgesRaw)
+    val keep = roundKeeper("hits", rows)
+    val nodes = keep(0, edges.select(col("src").as("node"))
+      .union(edges.select(col("dst"))).distinct())
     var h = nodes.withColumn("hm", lit(1000000L))
     var a = nodes.withColumn("am", lit(1000000L))
-    for (_ <- 1 to iterations) {
+    for (r <- 1 to iterations) {
       val araw = edges.join(h.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node")).agg(sum(col("w") * col("hm")).as("raw"))
       val amax = araw.agg(max(col("raw")).as("m"))
-      a = nodes.join(araw, Seq("node"), "left").crossJoin(broadcast(amax))
+      a = keep(r, nodes.join(araw, Seq("node"), "left").crossJoin(broadcast(amax))
         .select(col("node"),
           round(lit(1e6) * coalesce(col("raw"), lit(0L)) / col("m"))
-            .cast("long").as("am"))
-      if (materializeRounds) a = a.localCheckpoint()
+            .cast("long").as("am")))
       val hraw = edges.join(a.withColumnRenamed("node", "dst"), "dst")
         .groupBy(col("src").as("node")).agg(sum(col("w") * col("am")).as("raw"))
       val hmax = hraw.agg(max(col("raw")).as("m"))
-      h = nodes.join(hraw, Seq("node"), "left").crossJoin(broadcast(hmax))
+      h = keep(r, nodes.join(hraw, Seq("node"), "left").crossJoin(broadcast(hmax))
         .select(col("node"),
           round(lit(1e6) * coalesce(col("raw"), lit(0L)) / col("m"))
-            .cast("long").as("hm"))
-      if (materializeRounds) h = h.localCheckpoint()
+            .cast("long").as("hm")))
     }
     h.join(a, "node")
       .select(col("node"), col("hm").as("hub_micro"), col("am").as("auth_micro"))
       .orderBy(col("node"))
   }
 
-  def hitsTypes(spark: SparkSession, dir: String): DataFrame = {
-    val order = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val edges = Tables.events(spark, dir)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("prev", lag(col("event_type"), 1).over(order))
-      .where(col("prev").isNotNull)
-      .groupBy(col("prev").as("src"), col("event_type").as("dst"))
-      .agg(count(lit(1)).as("w"))
-      .coalesce(1) // |types|² artifact — same single-task note as pagerankTypes
-    hits(edges, iterations = 2, materializeRounds = false)
-      .withColumnRenamed("node", "event_type")
-  }
+  def hitsTypes(spark: SparkSession, dir: String): DataFrame =
+    hits(transitions(spark, dir), iterations = 2).withColumnRenamed("node", "event_type")
 
   val hitsTypesSql: String = {
     val rounds = (1 to 2).map { r =>
@@ -1158,8 +1150,7 @@ object GraphOps {
     * argument on a graph). Cost: one degree agg + two broadcast-class
     * joins onto the edge list. */
   def assortativity(spark: SparkSession, dir: String): DataFrame = {
-    val raw = Joins.fuzzyBlockedJoin(spark, dir)
-      .select(col("name_a").as("a"), col("name_b").as("b"))
+    val raw = nameEdges(spark, dir)
     val edges = raw.union(raw.select(col("b").as("a"), col("a").as("b")))
       .localCheckpoint()
     val deg = edges.groupBy(col("a").as("node")).agg(count(lit(1)).as("d"))
@@ -1317,7 +1308,7 @@ object GraphOps {
     val startPs = startRows.map(_._1)
     val e1 = li.filter(col("p").isin(startPs: _*))
       .select(col("p"), col("o"), row_number().over(byPart).as("rn"))
-    def h(parts: Column*) = graft.api.Graft.idHash(concat_ws(":", parts: _*))
+    def h(parts: Column*) = Graft.idHash(concat_ws(":", parts: _*))
     // bounded artifact: ≤ 20 starts × 8 walks = 160 rows — collected
     // whole (r16; the r15 shape paid a checkpoint job AND a collect)
     // and rebuilt as a local relation for the hop-2 broadcast side

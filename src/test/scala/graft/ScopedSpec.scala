@@ -1,11 +1,6 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
 import graft.api.Graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
@@ -18,30 +13,6 @@ import org.apache.spark.sql.functions._
 class ScopedSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val Partitions = "spark.sql.shuffle.partitions"
-
-  /** The [[Graft.ScopeTag]] of every Spark job started while `body`
-    * runs (null for an untagged job). The listener bus is asynchronous
-    * but ordered: once a marker job submitted after `body` is seen,
-    * every earlier job start has been seen too. */
-  private def tagsDuring[A](body: => A): (A, Seq[String]) = {
-    val sc = spark.sparkContext
-    val tags = new ConcurrentLinkedQueue[Option[String]]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        tags.add(Option(js.properties).flatMap(p => Option(p.getProperty(Graft.ScopeTag))))
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setLocalProperty(Graft.ScopeTag, "scoped-spec-marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(Graft.ScopeTag, null)
-      val marker = Some("scoped-spec-marker")
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!tags.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(tags.contains(marker), "marker job never reached the listener")
-      (out, tags.asScala.takeWhile(_ != marker).map(_.orNull).toSeq)
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("scoped: the body sees the settings, the caller's conf is untouched, the frame comes back bound to the caller") {
     val before = spark.conf.getAll

@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import graft.api.Graft
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -24,6 +30,30 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.spark
   def sf: String = SparkSpec.sf
+
+  /** The [[Graft.ScopeTag]] of every Spark job started while `body`
+    * runs (null for an untagged job). The listener bus is asynchronous
+    * but ordered: once a marker job submitted after `body` is seen,
+    * every earlier job start has been seen too. */
+  def tagsDuring[A](body: => A): (A, Seq[String]) = {
+    val sc = spark.sparkContext
+    val tags = new ConcurrentLinkedQueue[Option[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        tags.add(Option(js.properties).flatMap(p => Option(p.getProperty(Graft.ScopeTag))))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setLocalProperty(Graft.ScopeTag, "tags-during-marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(Graft.ScopeTag, null)
+      val marker = Some("tags-during-marker")
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!tags.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(tags.contains(marker), "marker job never reached the listener")
+      (out, tags.asScala.takeWhile(_ != marker).map(_.orNull).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 
   /** Drop a saved table AND its on-disk warehouse directory. The
     * catalog is in-memory per JVM, so a previous run's table dirs
