@@ -12,8 +12,10 @@ object Harness {
 
   /** `local[SPARK_GRAFT_CPUS]` (default 4) with one shuffle partition
     * per core, the engine's extensions (native functions, the
-    * HOF→native rewrite, the as-of planner), UI off, UTC session time
-    * and WARN logging. */
+    * HOF→native rewrite, the as-of planner, the in-place tiny sort), UI
+    * off, UTC session time, TIMESTAMP(NANOS) parquet read as long (so
+    * `Tables.events` reads either layout the generator has shipped) and
+    * WARN logging. */
   def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -22,6 +24,7 @@ object Harness {
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -171,22 +171,25 @@ object Tables {
         .getOrElse(throw new IllegalStateException(s"no top-level parquet data file in $path"))
     val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf), SKIP_ROW_GROUPS)
     // Spark rejects TIMESTAMP(NANOS) outright (PARQUET_TYPE_ILLEGAL)
-    // unless it is read as a plain long; the reader consults the same
-    // session conf at execution, so it is set only for such a file.
-    if (hasNanosTimestamp(meta.getFileMetaData.getSchema) &&
-        !spark.conf.getOption(NanosAsLong).contains("true"))
-      spark.conf.set(NanosAsLong, "true")
+    // unless the session reads it as a plain long. The scan consults the
+    // session conf when it executes, on the caller's session, so no
+    // private scope can carry the flag: the caller must set it.
+    val nanos = nanosTimestamps(meta.getFileMetaData.getSchema)
+    if (nanos.nonEmpty && !spark.conf.getOption(NanosAsLong).contains("true"))
+      throw new IllegalStateException(
+        s"${file.getPath} stores TIMESTAMP(NANOS) column(s) ${nanos.mkString(", ")}, which Spark " +
+          s"reads only as long: set $NanosAsLong=true on the session before reading it")
     ParquetFileFormat.readSchemaFromFooter(
       new Footer(file.getPath, meta), new ParquetToSparkSchemaConverter(GraftShim.sqlConf(spark)))
   }
 
-  private def hasNanosTimestamp(schema: MessageType): Boolean =
-    schema.getFields.asScala.exists { f =>
-      f.isPrimitive && f.asPrimitiveType.getPrimitiveTypeName == INT64 &&
-        (f.getLogicalTypeAnnotation match {
-          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
-          case _ => false
-        })
+  private def nanosTimestamps(schema: MessageType): Seq[String] =
+    schema.getFields.asScala.toSeq.collect {
+      case f if f.isPrimitive && f.asPrimitiveType.getPrimitiveTypeName == INT64 &&
+          (f.getLogicalTypeAnnotation match {
+            case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+            case _ => false
+          }) => f.getName
     }
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
@@ -200,7 +203,9 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
   /** `events.parquet` has shipped with two physical layouts for `ts`:
-    * TIMESTAMP(NANOS) (resolved as a plain long, see [[resolve]]) and,
+    * TIMESTAMP(NANOS) (read as a plain long, which needs the caller's
+    * session to set `spark.sql.legacy.parquet.nanosAsLong=true`; without
+    * it [[resolve]] throws naming the file and the flag) and,
     * after an Aug-2026 regeneration, TIMESTAMP(MICROS). We branch on the
     * resolved schema and normalize to the same two-column contract either
     * way: `ts` (TimestampType, micros) for windowing/watermarks and

@@ -1498,9 +1498,10 @@ object CorpusOps {
     // argmax over the Zipf-bounded word-freq table ran as several AQE
     // query-stage driver jobs with per-round codegen recompiles (the
     // seg expression grows each round, so plans never repeat). The
-    // count is a shuffle-free scan of the just-checkpointed table and
-    // gates the mode off when the vocabulary measures large.
-    val nWords = base.count()
+    // count reads the just-checkpointed table, stops one row past
+    // TinyRows (exact below it) and gates the mode off when the
+    // vocabulary measures large.
+    val nWords = base.limit(graft.api.Graft.TinyRows.toInt + 1).count()
     graft.api.Graft.scoped(spark, s"bpe_train:$nWords",
         graft.api.Graft.tiny(spark, nWords)) { s =>
       val words = graft.api.Graft.on(s, base)

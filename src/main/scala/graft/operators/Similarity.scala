@@ -3177,10 +3177,11 @@ object Similarity {
     // measured-tiny construction (r16): the three step checkpoints ran
     // as ~46 driver jobs of 1-3 tasks under AQE (query-stage
     // materialization per Exchange) — fixed overhead, not compute; the
-    // beam itself is ≤ queries × beam·(1+edgeK) rows. The count is a
-    // shuffle-free scan of the just-checkpointed assignment blocks and
-    // gates the mode off at real scale (see Graft.tiny).
-    val nAssigned = assigned.count()
+    // beam itself is ≤ queries × beam·(1+edgeK) rows. The count reads
+    // the just-checkpointed assignment blocks, stops one row past
+    // TinyRows (exact below it) and gates the mode off at real scale
+    // (see Graft.tiny).
+    val nAssigned = assigned.limit(graft.api.Graft.TinyRows.toInt + 1).count()
     val tiny = graft.api.Graft.tiny(spark, nAssigned)
     def step(beam: DataFrame): DataFrame =
       graft.api.Graft.scoped(spark, s"beam_search:$nAssigned", tiny) { s =>

@@ -27,6 +27,10 @@ object GraftShim {
     (exp.extraStrategies, exp.extraOptimizations)
   }
 
+  /** Whether Spark runs in its test mode (`spark.testing`), under which
+    * some of its rules read their confs differently. */
+  def isTesting: Boolean = org.apache.spark.util.Utils.isTesting
+
   /** The session's SQL conf (what Spark's own readers consult). */
   def sqlConf(spark: SparkSession): org.apache.spark.sql.internal.SQLConf =
     spark.asInstanceOf[classic.SparkSession].sessionState.conf

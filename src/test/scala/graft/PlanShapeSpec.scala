@@ -1,11 +1,19 @@
 package graft
 
-import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
-import org.apache.spark.sql.execution.{FileSourceScanExec, RowDataSourceScanExec, SparkPlan}
+import graft.plans.TinySort
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, RangePartitioning, SinglePartition}
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, InputAdapter, RowDataSourceScanExec, SortExec, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{EnsureRequirements, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim
 
 /** PLAN-SHAPE CONTRACT (r10 verdict task #2) — the physical-plan
   * sibling of the RegistrySpec output-type contract: no registered
@@ -33,6 +41,14 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
   * entity population rather than the fact-table row count; the named
   * allowlist below exists for any case that needs a human-carried
   * bound instead.
+  *
+  * The in-place tiny sort ([[graft.plans.TinySort]]) also runs a global
+  * sort on one task, but it is a MEASURED, AQE-only decision: it fires
+  * only when the sort's input is bounded by a materialized stage's or a
+  * one-split file relation's size at or under the size AQE coalesces
+  * into one partition (1 MB on the default confs). The static
+  * (AQE-off) contract above never sees it; the `tiny sort:` specs at the
+  * end pin both sides of its bound.
   */
 class PlanShapeSpec extends SparkSpec {
 
@@ -281,5 +297,167 @@ class PlanShapeSpec extends SparkSpec {
         Window.orderBy(col("o_totalprice"), col("o_orderkey"))))
     assert(flagged(bad).nonEmpty,
       "detector failed to flag a data-sized global ntile")
+  }
+  // ---------- in-place tiny sort (AQE, measured) ----------
+
+  /** Every node of `df`'s final adaptive plan, stage contents included,
+    * after collecting it. */
+  private def finalNodes(df: DataFrame): Seq[SparkPlan] = {
+    def all(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => all(a.executedPlan)
+      case s: QueryStageExec => s +: all(s.plan)
+      case o => o +: o.children.flatMap(all)
+    }
+    df.collect()
+    all(df.queryExecution.executedPlan)
+  }
+
+  private def rangeExchanges(nodes: Seq[SparkPlan]): Seq[Int] = nodes.collect {
+    case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] =>
+      e.outputPartitioning.numPartitions
+  }
+
+  /** Global sorts straight over `Coalesce 1` (through a codegen input). */
+  private def inPlaceSorts(nodes: Seq[SparkPlan]): Int = nodes.count {
+    case SortExec(_, true, CoalesceExec(1, _) | InputAdapter(CoalesceExec(1, _)), _) => true
+    case _ => false
+  }
+
+  /** A clone of the spec session with `confs` set. */
+  private def withConfs(confs: (String, String)*): SparkSession = {
+    val s = GraftShim.cloneSession(spark)
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
+
+  /** A clone on which the rule never fires: AQE does not coalesce, so it
+    * never reads a range shuffle back as one partition. */
+  private lazy val heldOff: SparkSession = withConfs("spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+
+  test("tiny sort: the bound is the size at which AQE coalesces a shuffle into one partition") {
+    val mb = 1L << 20
+    // spec session: local[4] with parallelismFirst on, so minPartitionSize
+    assert(TinySort(spark).onePartitionBytes === Some(mb))
+    assert(TinySort(withConfs("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "2m"))
+      .onePartitionBytes === Some(2 * mb))
+    // a minimum of one partition: the advisory size, or minPartitionSize if larger
+    assert(TinySort(withConfs("spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false"))
+      .onePartitionBytes === Some(64 * mb))
+    assert(TinySort(withConfs("spark.sql.adaptive.coalescePartitions.minPartitionNum" -> "1",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "512k")).onePartitionBytes === Some(mb))
+    assert(TinySort(heldOff).onePartitionBytes === None)
+  }
+
+  test("tiny sort: a sort over a small file scan runs in place, in one job, with no range exchange") {
+    val df = Tables.orders(spark, sf).filter(col("o_totalprice") > 1000).orderBy(col("o_totalprice"), col("o_orderkey"))
+    val nodes = finalNodes(df)
+    assert(rangeExchanges(nodes).isEmpty, nodes.map(_.nodeName))
+    assert(inPlaceSorts(nodes) === 1, nodes.map(_.nodeName))
+    assert(tagsDuring(df.collect())._2.size === 1)
+  }
+
+  test("tiny sort: a sort over an aggregate runs in place once the aggregate's input stage measures small") {
+    val df = Tables.lineitem(spark, sf).groupBy(col("l_returnflag"), col("l_linestatus"))
+      .agg(sum(col("l_quantity")).as("q")).orderBy(col("l_returnflag"), col("l_linestatus"))
+    val nodes = finalNodes(df)
+    assert(rangeExchanges(nodes).isEmpty, nodes.map(_.nodeName))
+    assert(inPlaceSorts(nodes) === 1, nodes.map(_.nodeName))
+  }
+
+  test("tiny sort: with the bound forced below the input the range exchange is kept, same rows in the same order") {
+    def q(s: SparkSession) = Tables.orders(s, sf).orderBy(col("o_totalprice"), col("o_orderkey"))
+    for (off <- Seq(heldOff, withConfs("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1"))) {
+      val nodes = finalNodes(q(off))
+      assert(rangeExchanges(nodes) === Seq(4), nodes.map(_.nodeName))
+      assert(inPlaceSorts(nodes) === 0)
+      assert(q(off).collect().toSeq === q(spark).collect().toSeq)
+    }
+  }
+
+  test("tiny sort: a small file scan that Spark splits keeps its range exchange, whatever the bound") {
+    // orders is one ~36 KB file: 16 KB splits make it a multi-task scan,
+    // which Coalesce 1 would run serially
+    for (bound <- Seq("1m", "64m")) {
+      val s = withConfs("spark.sql.files.maxPartitionBytes" -> "16k",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> bound)
+      val df = Tables.orders(s, sf).orderBy(col("o_totalprice"), col("o_orderkey"))
+      val nodes = finalNodes(df)
+      assert(rangeExchanges(nodes) === Seq(4), nodes.map(_.nodeName))
+      assert(inPlaceSorts(nodes) === 0, nodes.map(_.nodeName))
+    }
+  }
+
+  test("tiny sort: repartitionByRange(n) keeps its n partitions") {
+    val r = Tables.orders(spark, sf).repartitionByRange(3, col("o_orderkey"))
+    assert(r.rdd.getNumPartitions === 3)
+    val sorted = r.orderBy(col("o_orderkey"))
+    val nodes = finalNodes(sorted)
+    assert(rangeExchanges(nodes) === Seq(3), nodes.map(_.nodeName))
+    assert(inPlaceSorts(nodes) === 0)
+    assert(sorted.rdd.getNumPartitions === 3)
+  }
+
+  test("tiny sort: a sort over an explode or a join keeps its range exchange") {
+    val explode = Tables.orders(spark, sf)
+      .select(col("o_orderkey"), posexplode(array(lit(1), lit(2))).as(Seq("i", "x")))
+      .orderBy(col("o_orderkey"), col("i"))
+    val join = Tables.orders(spark, sf).join(Tables.customer(spark, sf), col("o_custkey") === col("c_custkey"))
+      .orderBy(col("o_orderkey"))
+    for (df <- Seq(explode, join)) {
+      val nodes = finalNodes(df)
+      assert(rangeExchanges(nodes).nonEmpty, nodes.map(_.nodeName))
+      assert(inPlaceSorts(nodes) === 0, nodes.map(_.nodeName))
+    }
+  }
+
+  test("tiny sort: an orderBy feeding a sort-merge join is left as Spark plans it") {
+    // Catalyst drops a global sort under a join, so the join's own hash
+    // exchanges remain and nothing is coalesced
+    val noBroadcast = withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val df = Tables.orders(noBroadcast, sf).orderBy(col("o_custkey"))
+      .join(Tables.customer(noBroadcast, sf), col("o_custkey") === col("c_custkey"))
+    val on = finalNodes(df)
+    assert(on.exists(_.nodeName == "SortMergeJoin"), on.map(_.nodeName))
+    assert(on.count(_.isInstanceOf[ShuffleExchangeExec]) === 2, on.map(_.nodeName))
+    assert(!on.exists(_.isInstanceOf[CoalesceExec]), on.map(_.nodeName))
+  }
+
+  /** Requires its input clustered on its first column in exactly four
+    * partitions, as a co-partitioned parent of a range sort would. */
+  private case class FourClusters(child: SparkPlan) extends UnaryExecNode {
+    override def output: Seq[Attribute] = child.output
+    override def requiredChildDistribution: Seq[Distribution] =
+      Seq(ClusteredDistribution(child.output.take(1), requiredNumPartitions = Some(4)))
+    override protected def doExecute(): RDD[InternalRow] = child.execute()
+    override protected def withNewChildInternal(c: SparkPlan): SparkPlan = copy(child = c)
+  }
+
+  test("tiny sort: a rewrite that breaks a parent's distribution requirement is dropped") {
+    val df = Tables.orders(spark, sf).select(col("o_orderkey"), col("o_totalprice")).orderBy(col("o_orderkey"))
+    val sort = EnsureRequirements()(df.queryExecution.sparkPlan)
+    assert(rangeExchanges(sort.collect { case p => p }) === Seq(4))
+    // alone, the sort is rewritten in place
+    assert(inPlaceSorts(TinySort(spark)(sort).collect { case p => p }) === 1)
+    // under a parent that needs the four range partitions, it is kept
+    val parent = FourClusters(sort)
+    assert(TinySort(spark)(parent) eq parent)
+  }
+
+  test("tiny sort: every sorting etl_mix query returns the same row sequence with the rule firing and held off") {
+    // q5's aggregate is one row at sf0.001, so AQE drops its sort on
+    // both sides; etl_merge_upsert sorts a full outer join (no bound)
+    val fires = Seq("ref_ingest_filter", "ref_reject_split", "agg_pricing_summary", "etl_scd2")
+    for (q <- fires ++ Seq("q5_local_supplier_volume", "etl_merge_upsert")) {
+      val fn = SparkEntry.queries(q)
+      val firing = fn(spark, sf)
+      val nodes = finalNodes(firing)
+      assert(inPlaceSorts(nodes) === (if (fires.contains(q)) 1 else 0), s"$q: ${nodes.map(_.nodeName)}")
+      val offNodes = finalNodes(fn(heldOff, sf))
+      assert(inPlaceSorts(offNodes) === 0, s"$q: ${offNodes.map(_.nodeName)}")
+      if (fires.contains(q)) assert(rangeExchanges(offNodes).nonEmpty, s"$q: ${offNodes.map(_.nodeName)}")
+      val rows: Seq[Row] = firing.collect().toSeq
+      assert(rows.nonEmpty, q)
+      assert(rows === fn(heldOff, sf).collect().toSeq, q)
+    }
   }
 }

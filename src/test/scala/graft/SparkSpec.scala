@@ -11,10 +11,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** Shared local SparkSession for all specs (one JVM-wide session —
-  * Spark session startup dominates test time otherwise). */
+  * Spark session startup dominates test time otherwise). It carries the
+  * engine's physical rule ([[graft.plans.TinySort]]) so specs plan and
+  * count jobs as the harness session does; the native functions and the
+  * HOF rewrite are registered per spec, which toggles them. */
 object SparkSpec {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
+      .withExtensions(_.injectQueryStagePrepRule(graft.plans.TinySort))
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")

@@ -129,7 +129,9 @@ class TablesSpec extends SparkSpec {
     } finally before.foreach(spark.conf.set(NanosAsLong, _))
   }
 
-  test("Tables.events normalizes a TIMESTAMP(NANOS) file exactly: ts micros + ts_ns nanos") {
+  /** A three-row `events.parquet` whose `ts` is TIMESTAMP(NANOS), as the
+    * pre-Aug-2026 generator wrote it; returns its directory. */
+  private def writeNanosEvents(nanos: Seq[Long]): String = {
     val dir = tmpDir("graft_tables_nanos")
     val schema = MessageTypeParser.parseMessageType(
       """message schema {
@@ -140,7 +142,6 @@ class TablesSpec extends SparkSpec {
         |  required double value;
         |  required binary props (STRING);
         |}""".stripMargin)
-    val nanos = Seq(1700000000123456789L, 1700000001000000001L, 1L)
     val writer = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet"))
       .withType(schema).withConf(new Configuration()).build()
     try {
@@ -151,19 +152,46 @@ class TablesSpec extends SparkSpec {
           .append("event_type", "click").append("value", 1.5).append("props", "{}"))
       }
     } finally writer.close()
+    dir
+  }
 
+  /** Runs `body` with the session's nanosAsLong conf set to `value`
+    * (None: unset), restoring the previous setting after. */
+  private def withNanosAsLong[A](value: Option[String])(body: => A): A = {
     val before = spark.conf.getOption(NanosAsLong)
-    spark.conf.unset(NanosAsLong)
-    try {
+    value.fold(spark.conf.unset(NanosAsLong))(spark.conf.set(NanosAsLong, _))
+    try body
+    finally {
+      spark.conf.unset(NanosAsLong)
+      before.foreach(spark.conf.set(NanosAsLong, _))
+    }
+  }
+
+  test("Tables.events on a TIMESTAMP(NANOS) file without the flag fails naming file and flag; the caller's conf is unchanged") {
+    val dir = writeNanosEvents(Seq(1L))
+    withNanosAsLong(None) {
+      val confBefore = spark.conf.getAll
+      val e = intercept[IllegalStateException](Tables.events(spark, dir))
+      assert(e.getMessage.contains(s"$dir/events.parquet"), e.getMessage)
+      assert(e.getMessage.contains("TIMESTAMP(NANOS) column(s) ts"), e.getMessage)
+      assert(e.getMessage.contains(s"set $NanosAsLong=true"), e.getMessage)
+      assert(spark.conf.getAll === confBefore)
+    }
+  }
+
+  // the caller sets the flag itself: Tables never writes the session conf
+  test("Tables.events normalizes a TIMESTAMP(NANOS) file exactly: ts micros + ts_ns nanos") {
+    val nanos = Seq(1700000000123456789L, 1700000001000000001L, 1L)
+    val dir = writeNanosEvents(nanos)
+    withNanosAsLong(Some("true")) {
+      val confBefore = spark.conf.getAll
       val ev = Tables.events(spark, dir)
       assert(ev.schema("ts").dataType === TimestampType)
       assert(ev.schema("ts_ns").dataType === LongType)
       val got = ev.selectExpr("event_id", "ts_ns", "unix_micros(ts)").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
       assert(got === nanos.zipWithIndex.map { case (ns, i) => (i.toLong, ns, ns / 1000) })
-    } finally {
-      spark.conf.unset(NanosAsLong)
-      before.foreach(spark.conf.set(NanosAsLong, _))
+      assert(spark.conf.getAll === confBefore)
     }
   }
 }
